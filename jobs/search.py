@@ -2,7 +2,10 @@
 
     spark-submit --py-files /tmp/mias.zip jobs/search.py \
         --index <index-root> --query "<text and/or MathML>" \
-        [--k 10] [--offset 0] [--mode df|blocks] [--variant BOTH|P|C]
+        [--k 10] [--offset 0] [--mode blocks|df] [--variant BOTH|P|C]
+
+``--mode blocks`` (default) is the serving plan; ``df`` is the Catalyst
+reference plan.
 
 Local smoke:
 
@@ -26,7 +29,7 @@ def main() -> None:
     ap.add_argument("--query", required=True)
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--offset", type=int, default=0)
-    ap.add_argument("--mode", default="df", choices=["df", "blocks"])
+    ap.add_argument("--mode", default="blocks", choices=["blocks", "df"])
     ap.add_argument("--variant", default="BOTH", choices=["BOTH", "P", "C"])
     ap.add_argument("--cpus", default=None)
     args = ap.parse_args()

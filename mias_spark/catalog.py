@@ -333,6 +333,31 @@ class Catalog:
             return None
         return self.read("tombstones")
 
+    def tombstone_ids(self, max_rows: int):
+        """Tombstoned doc ids as a sorted unique int64 numpy array,
+        read DRIVER-SIDE with pyarrow (the liveDocs bitset a Lucene
+        reader loads per segment). Empty when the index has no
+        tombstones. The row count comes from the parquet footers
+        first, so a set larger than ``max_rows`` is never read: None
+        then, and None on the Iceberg binding or when arrow cannot read
+        the files — callers keep the distributed co-grouped channel for
+        those."""
+        import numpy as np
+        if not self.has_table("tombstones"):
+            return np.empty(0, np.int64)
+        if self._iceberg_ns():
+            return None
+        import pyarrow as pa
+        import pyarrow.dataset as pds
+        try:
+            dset = pds.dataset(self.path("tombstones"), format="parquet")
+            if dset.count_rows() > max_rows:
+                return None
+            ids = dset.to_table(columns=["doc_id"]).column("doc_id")
+        except (OSError, pa.ArrowException):
+            return None
+        return np.unique(ids.to_numpy().astype(np.int64))
+
     def add_tombstones(self, doc_ids: DataFrame) -> None:
         self.append(doc_ids.select("doc_id"), "tombstones")
 

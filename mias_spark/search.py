@@ -9,12 +9,17 @@ fields.
 
 Two physical plans, rank-identical by construction:
 
+  mode="blocks" : the serving plan and the default. Packed delta-gap
+                  varint blocks decoded by a numpy kernel; block-max
+                  metadata skips blocks that cannot reach the running
+                  top-k floor (block-max pruning; conservative
+                  OR-upper-bound threshold). A query whose postings fit
+                  one shard runs driver-side in ONE job, tombstones
+                  included (a small dead set is read once per snapshot
+                  and masked in the kernel, the Lucene liveDocs filter).
   mode="df"     : exploded postings + Catalyst; whole-stage codegen,
-                  zero Python in the hot path. Baseline + oracle surface.
-  mode="blocks" : packed delta-gap varint blocks decoded by a numpy
-                  mapInPandas kernel; block-max metadata skips blocks
-                  that cannot reach the running top-k floor (block-max
-                  pruning; conservative OR-upper-bound threshold).
+                  zero Python in the hot path. The reference plan behind
+                  the ``ir_engine_topk`` DuckDB oracle row.
 """
 
 from __future__ import annotations
@@ -62,9 +67,14 @@ class SearchResult:
     total_hits_relation: str = "eq"   # "eq" | "gte"
     #: blocks-mode stats for THIS query — skipped_blocks, lossy_blocks,
     #: theta, n_shards, meta_rows (metadata rows the driver pulled for
-    #: this call; 0 on a memo hit). None for df-mode. Per-call value:
-    #: concurrent searches on one Engine each get their own (the
-    #: round-3 engine-level mutable mirror fields are gone).
+    #: this call; 0 on a memo hit), path (the plan that ran: "fast" =
+    #: one job collects the block rows and the whole pipeline runs
+    #: driver-side, "driver" = single-shard kernel run driver-side
+    #: after the metadata job, "distributed" = sharded Spark kernel)
+    #: and dead_ids (size of the driver-side tombstone set the kernel
+    #: masked; -1 when tombstones/exclusions rode the co-grouped
+    #: channel instead). None for df-mode. Per-call value: concurrent
+    #: searches on one Engine each get their own.
     blocks_stats: dict | None = None
 
 
@@ -406,7 +416,12 @@ def kernel_core(pdf: pd.DataFrame, params: tuple, dead_l,
                                             else row.avgdl, 1e-12)
                     return (row.max_score * scale * max(ratio, 1.0)
                             * sum(b for _, b in pair[1]))
-                rows_g = sorted(rows_g, key=lambda p: -_ub(p))
+                # ties broken on the unique block key: pruning (and
+                # the totals) must not depend on the input row order,
+                # which differs between the driver and Spark paths
+                rows_g = sorted(rows_g, key=lambda p: (
+                    -_ub(p), int(p[0].term_id), int(p[0].salt),
+                    int(p[0].block_ord), int(p[0].first_doc)))
                 ubs = [_ub(p) for p in rows_g]
                 # per-term slack: a doc in one block can ALSO receive
                 # contributions from the group's OTHER terms (each doc
@@ -502,7 +517,10 @@ def kernel_core(pdf: pd.DataFrame, params: tuple, dead_l,
             ub = (row.max_score * scale * max(ratio, 1.0)
                   * max(b for _, b in entries))
             rows2.append((ub, row, entries))
-        rows2.sort(key=lambda x: -x[0])
+        # unique block key breaks ub ties (see the conjunctive branch)
+        rows2.sort(key=lambda x: (-x[0], int(x[1].term_id),
+                                  int(x[1].salt), int(x[1].block_ord),
+                                  int(x[1].first_doc)))
         ubmax: dict[int, float] = {}
         for ub, row, _e in rows2:
             t = int(row.term_id)
@@ -697,6 +715,8 @@ class Engine:
         #: LRU-capped in _pruned (eviction unpersists; a memoized plan
         #: over an evicted slice stays correct, it just re-reads files)
         self._slices_cap = 64
+        #: (dead ids,) for the pinned snapshot once read — see _dead_ids
+        self._dead: tuple | None = None
         #: guards the driver-side caches (plans/slices/tables/term/meta)
         #: under concurrent searches — held only around dict mutation,
         #: never across a Spark job
@@ -736,6 +756,7 @@ class Engine:
             self._block_meta = {}
             self._plans = {}
             self._bases = {}
+            self._dead = None
             if hasattr(self, "_blocks_pos_"):
                 del self._blocks_pos_
             props = self.cat.props()
@@ -822,6 +843,18 @@ class Engine:
             self._term_cache.clear()
             self._block_meta.clear()
             self._plans.clear()
+            self._dead = None
+
+    def _dead_ids(self):
+        """Sorted int64 tombstone ids of the pinned snapshot, read once
+        driver-side (Catalog.tombstone_ids) and memoized until the next
+        commit. Empty on a clean index; None when the set is larger
+        than one kernel shard's worth or lives behind the Iceberg
+        binding — the distributed co-grouped channel handles those."""
+        with self._lock:
+            if self._dead is None:
+                self._dead = (self.cat.tombstone_ids(_SHARD_POSTINGS),)
+            return self._dead[0]
 
     # ------------------------------------------------------------- compile
     def compile(self, query_text: str, variant: str = "BOTH",
@@ -1008,21 +1041,26 @@ class Engine:
     # -------------------------------------------------------------- search
     def search(self, query_text: str, k: int = 10, offset: int = 0,
                variant: str = "BOTH", extract_subformulae: bool = True,
-               reduce_weighting: bool = True, mode: str = "df",
+               reduce_weighting: bool = True, mode: str = "blocks",
                with_fields: bool = True, snippets: bool = False,
                debug: bool = False,
                timeout_s: float | None = None) -> SearchResult:
-        """``timeout_s``: Q9 time-limited search (the reference's 30 s
+        """``mode``: ``"blocks"`` (default) is the serving plan — the
+        packed-block kernel, driver-side in one job when the query's
+        postings fit one shard; ``"df"`` is the Catalyst reference plan
+        over exploded posting rows (the ``ir_engine_topk`` oracle row).
+
+        ``timeout_s``: Q9 time-limited search (the reference's 30 s
         TimeLimitingCollector, Searching.java:169-200) — cancels the
         Spark job group at the deadline. With a deadline armed, BOTH
-        distributed plans stream per-task results (shard kernels in
-        blocks mode, per-partition local top-n in df mode) through a
-        local iterator into a partial sink as they complete, so the
-        deadline returns the hits gathered so far with the GTE
+        plans run distributed and stream per-task results (shard
+        kernels in blocks mode, per-partition local top-n in df mode)
+        through a local iterator into a partial sink as they complete,
+        so the deadline returns the hits gathered so far with the GTE
         relation (the reference returns whatever the collector
-        gathered; our granularity is the task). Only the one-shot
-        driver kernel remains all-or-nothing — its single collect is
-        one Lucene segment's worth of work."""
+        gathered; our granularity is the task). The one-shot driver
+        paths are skipped while a deadline is armed: their single
+        collect would make the search all-or-nothing."""
         if timeout_s is not None:
             import threading
             sc = self.spark.sparkContext
@@ -1070,13 +1108,12 @@ class Engine:
                     # them like any kernel output — totals and top-k
                     # over what arrived, relation GTE (the reference's
                     # partial-collector semantics, Searching.java:186)
-                    topn, theta, n_grp, n_sh, mrows = sink["ctx"]
                     allpdf = pd.DataFrame(
                         sink["rows"], columns=[
                             "doc_id", "score", "n_hits", "n_skipped",
                             "n_lossy"])
                     pdf4, total, _rel, stats = self._finish_blocks(
-                        allpdf, topn, theta, n_grp, n_sh, mrows)
+                        allpdf, *sink["ctx"])
                     hits = pdf4.iloc[offset:offset + k] \
                         .reset_index(drop=True)
                     hits.insert(0, "rank", np.arange(
@@ -1700,7 +1737,9 @@ class Engine:
         # prepared-plan hit: re-execute the stored plan (fresh job, no
         # plan construction). The fused phrase/ban structure is part of
         # the key; legacy allow/banned frames are rebuilt per call, so
-        # those plans are not memoized
+        # those plans are not memoized. An armed deadline keys its own
+        # (always distributed) plans, so it never hits a driver-side one
+        streaming = partial_sink is not None
         pkey = None
         if self._cache and allow_df is None and banned_df is None:
             ffp = None
@@ -1709,26 +1748,30 @@ class Engine:
                        tuple(sorted(fused["banned_set"])))
             pkey = (tuple(sorted(
                 (int(r.term_id), int(r.grp), float(r.boost))
-                for r in clauses.itertuples())), topn, n_groups, ffp)
+                for r in clauses.itertuples())), topn, n_groups, ffp,
+                streaming)
             hit = self._plan_get(pkey)
             if hit is not None:
                 if hit[-1] == "fast":
-                    bdf_m, cl_m, cmap_m, mb_m, fu_m, _ = hit
+                    bdf_m, cl_m, cmap_m, mb_m, fu_m, dead_m, _ = hit
                     # metadata came from the memo: meta_rows 0
                     return self._topk_blocks_local(
                         bdf_m, cl_m, cmap_m, mb_m, topn, n_groups, None,
-                        memo_hit=True, fused=fu_m)
-                plan, pparams, ptheta, pshards, kind = hit
+                        dead_m, memo_hit=True, fused=fu_m)
+                # pdead: the dead-id array (driver) or the dead_ids
+                # stat (dist) the plan was built with
+                plan, pparams, ptheta, pshards, pdead, kind = hit
                 if kind == "driver":
-                    allpdf = kernel_core(plan.toPandas(), pparams, None)
-                else:
-                    # memo hits honor an armed deadline exactly like
-                    # the cold path: completed shards land in the sink
-                    allpdf = self._collect_kernel(
-                        plan, partial_sink,
-                        (topn, ptheta, n_groups, pshards, 0))
-                return self._finish_blocks(allpdf, topn, ptheta,
-                                           n_groups, pshards, 0)
+                    allpdf = kernel_core(plan.toPandas(), pparams, pdead)
+                    return self._finish_blocks(
+                        allpdf, topn, ptheta, n_groups, pshards, 0,
+                        "driver", len(pdead))
+                # memo hits honor an armed deadline exactly like the
+                # cold path: completed shards land in the sink
+                ctx = (topn, ptheta, n_groups, pshards, 0,
+                       "distributed", pdead)
+                allpdf = self._collect_kernel(plan, partial_sink, ctx)
+                return self._finish_blocks(allpdf, *ctx)
         terms = [int(t) for t in set(clauses["term_id"])]
         buckets = [int(b) for b in set(clauses["bucket"])]
         # column-prune the scoring scan: the kernel never reads
@@ -1768,33 +1811,41 @@ class Engine:
             for c in ("idf0", "avgdl0"):  # pre-snapshot index: scale = 1
                 if c not in bdf.columns:
                     bdf = bdf.withColumn(c, F.lit(None).cast("double"))
-        tomb = self.cat.tombstones()
+        # liveDocs: the snapshot's tombstone ids as a driver-side array
+        # when small (None: too many, or Iceberg — co-grouped below)
+        dead = self._dead_ids()
+        clean = dead is not None and not len(dead)
+        # the one-shot driver paths need the dead set in hand and no
+        # deadline (their single collect cannot return partial hits)
+        local_ok = dead is not None and not streaming
         # ---- small-query fast path: the dictionary df already bounds
         # the posting volume (scoring AND phrase/banned terms — their
         # dfs ride pplan.extra_df_total), so when the whole query fits
         # one shard ONE job collects the block rows — metadata
         # reduction, theta, range filters, the fused phrase pre-pass
-        # and the kernel all run driver-side on that frame. Cold
-        # interactive searches drop from 3 sequential jobs
-        # (dictionary, metadata agg, kernel) to 2.
+        # and the kernel (masking the dead ids) all run driver-side on
+        # that frame. Cold interactive searches drop from 3 sequential
+        # jobs (dictionary, metadata agg, kernel) to 2.
         extra_df = int(pplan.get("extra_df_total", 0)) if fused else 0
         df_total = (int(clauses.drop_duplicates("term_id")["df"].sum())
                     if "df" in clauses.columns and len(clauses) else
                     (0 if fused else None))
-        if (df_total is not None and df_total + extra_df
-                <= _SHARD_POSTINGS
-                and tomb is None and banned_df is None
+        if (local_ok and df_total is not None
+                and df_total + extra_df <= _SHARD_POSTINGS
+                and banned_df is None
                 and (n_pgroups == 0 or fused is not None)):
             bdf_l = bdf
             if fused:
                 bdf_l = self._fused_union(bdf, fused, cmap)
             return self._topk_blocks_local(bdf_l, clauses, cmap,
                                            max_boost, topn, n_groups,
-                                           pkey, fused=fused)
+                                           pkey, dead, fused=fused)
+        tomb = None if clean else self.cat.tombstones()
         # a tombstoned/banned doc may be the block-max achiever, so the
-        # floor is only a valid lower bound on a CLEAN unfiltered
-        # single-term-group query; `optimize` restores pruning after
-        # deletes
+        # Spark-side floor is only a valid lower bound on a CLEAN
+        # unfiltered single-term-group query (the fast path filters
+        # dead-holding blocks out of its floor instead); `optimize`
+        # restores pruning after deletes
         need_theta = (n_groups == 1 and tomb is None
                       and banned_df is None and n_pgroups == 0
                       and fused is None)
@@ -1834,7 +1885,8 @@ class Engine:
         if not mrows and fused is None:
             return empty, 0, "eq", {
                 "skipped_blocks": 0, "lossy_blocks": 0, "theta": 0.0,
-                "n_shards": 0, "meta_rows": meta_rows}
+                "n_shards": 0, "meta_rows": meta_rows,
+                "path": "distributed", "dead_ids": 0}
         if mrows:
             lo = min(int(r["blo"]) for r in mrows)
             hi = max(int(r["bhi"]) for r in mrows)
@@ -1967,7 +2019,7 @@ class Engine:
         out_schema = ("doc_id long, score double, n_hits long, "
                       "n_skipped long, n_lossy long")
 
-        if n_shards == 1 and tomb is None and banned_df is None \
+        if n_shards == 1 and local_ok and banned_df is None \
                 and not has_allow:
             # single-shard short-circuit: the whole query fits one
             # kernel invocation (≤ _SHARD_POSTINGS postings, known
@@ -1979,11 +2031,12 @@ class Engine:
             # volume would not fit one task.
             if pkey is not None:
                 self._plan_put(pkey, (withmeta, params, theta,
-                                      n_shards, "driver"))
+                                      n_shards, dead, "driver"))
             pdf_blocks = withmeta.toPandas()
-            allpdf = kernel_core(pdf_blocks, params, None)
+            allpdf = kernel_core(pdf_blocks, params, dead)
             return self._finish_blocks(allpdf, topn, theta, n_groups,
-                                       n_shards, meta_rows)
+                                       n_shards, meta_rows, "driver",
+                                       len(dead))
 
         bc = self.spark.sparkContext.broadcast(params)
 
@@ -1991,7 +2044,9 @@ class Engine:
             return kernel_core(pdf, bc.value, dead_l, allow_docs,
                                allow_ps)
 
-        if tomb is not None or banned_df is not None or has_allow:
+        right_side = tomb is not None or banned_df is not None \
+            or has_allow
+        if right_side:
             # doc-level side inputs (tombstones, MUST_NOT docs, phrase
             # allowlist + scores) co-grouped by the SAME shard key: each
             # task receives its shard's slice — nothing through the
@@ -2000,10 +2055,10 @@ class Engine:
                      if x is not None]
             right = None
             if parts:
-                dead = parts[0]
+                dead_df = parts[0]
                 for x in parts[1:]:
-                    dead = dead.unionByName(x)
-                right = dead.select(
+                    dead_df = dead_df.unionByName(x)
+                right = dead_df.select(
                     "doc_id", F.lit(0).alias("typ"),
                     F.lit(0.0).alias("pscore"))
             if has_allow:
@@ -2040,14 +2095,15 @@ class Engine:
             local = (withmeta.repartition(n_shards, "shard")
                      .mapInPandas(kernel, out_schema))
 
+        # dead_ids stat: -1 when the co-grouped channel carried them
+        n_dead = -1 if right_side else 0
         if pkey is not None:
-            self._plan_put(pkey, (local, None, theta, n_shards,
+            self._plan_put(pkey, (local, None, theta, n_shards, n_dead,
                                   "dist"))
-        allpdf = self._collect_kernel(
-            local, partial_sink, (topn, theta, n_groups, n_shards,
-                                  meta_rows))
-        return self._finish_blocks(allpdf, topn, theta, n_groups,
-                                   n_shards, meta_rows)
+        ctx = (topn, theta, n_groups, n_shards, meta_rows,
+               "distributed", n_dead)
+        allpdf = self._collect_kernel(local, partial_sink, ctx)
+        return self._finish_blocks(allpdf, *ctx)
 
     def _fused_extras(self, fused: dict, cmap: dict,
                       lo: int | None = None, hi: int | None = None
@@ -2132,7 +2188,8 @@ class Engine:
 
     def _topk_blocks_local(self, bdf: DataFrame, clauses: pd.DataFrame,
                            cmap: dict, max_boost: dict, topn: int,
-                           n_groups: int, pkey, memo_hit: bool = False,
+                           n_groups: int, pkey, dead: np.ndarray,
+                           memo_hit: bool = False,
                            fused: dict | None = None,
                            ) -> tuple[pd.DataFrame, int, str, dict]:
         """Driver-side mirror of the _topk_blocks pruning pipeline for
@@ -2140,19 +2197,23 @@ class Engine:
         to one shard's worth: ONE job collects the few compressed block
         rows, then metadata reduction, the theta floor, conjunctive
         range filters, the fused phrase pre-pass and the kernel all run
-        on the local frame. Semantics are identical to the distributed
-        path — pinned by the forced-distributed comparison in
-        test_driver_kernel_short_circuit_and_prepared_plans."""
+        on the local frame. ``dead`` (sorted tombstone ids) is masked
+        in the kernel, and blocks whose doc range holds a dead id are
+        left out of the theta floor. Semantics are identical to the
+        distributed path — pinned by the forced-distributed
+        comparisons in test_driver_kernel_short_circuit_and_prepared_plans
+        and test_tombstoned_fast_path_matches_oracle_and_distributed."""
         empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                               "score": pd.Series(dtype="float64")})
         pdfb = bdf.toPandas()
         if pkey is not None:
             self._plan_put(pkey, (bdf, clauses, cmap, max_boost, fused,
-                                  "fast"))
+                                  dead, "fast"))
         if not len(pdfb):
             return empty, 0, "eq", {
                 "skipped_blocks": 0, "lossy_blocks": 0, "theta": 0.0,
-                "n_shards": 0, "meta_rows": 0}
+                "n_shards": 0, "meta_rows": 0, "path": "fast",
+                "dead_ids": int(len(dead))}
         imap = {int(r.term_id): (float(r.idf), float(r.avgdl))
                 for r in clauses.drop_duplicates("term_id").itertuples()}
         # fused extras (phrase/banned-term blocks) skip the scoring
@@ -2173,16 +2234,26 @@ class Engine:
             scale = fidf / np.maximum(i0, 1e-12)
             ratio = favg / np.maximum(a0, 1e-12)
             ms = pdfb["max_score"].astype(float)
+            lb = ms * scale * np.minimum(ratio, 1.0)
+            if len(dead):
+                # a block holding a dead id may owe its max_score to
+                # that doc: it cannot vouch for a live doc, so it is
+                # left out of the floor (lbn over dead-free blocks)
+                lo_b = pdfb["first_doc"].to_numpy(np.int64)
+                hi_b = pdfb["last_doc"].to_numpy(np.int64)
+                holds = (np.searchsorted(dead, hi_b, "right")
+                         > np.searchsorted(dead, lo_b))
+                lb = lb.where(~holds)
             pdfb = pdfb.assign(idf=fidf, avgdl=favg,
                                _ub=ms * scale * np.maximum(ratio, 1.0),
-                               _lb=ms * scale * np.minimum(ratio, 1.0))
+                               _lb=lb)
             # per-term reduced metadata — the same (ubm, nb, npost,
             # blo, bhi, lbn) tuple the distributed agg returns
             for t, g in pdfb.groupby("term_id"):
                 t = int(t)
                 nb = len(g)
-                lbs = np.sort(g["_lb"].to_numpy())[::-1]
-                lbn = float(lbs[topn - 1]) if nb >= topn else None
+                lbs = np.sort(g["_lb"].dropna().to_numpy())[::-1]
+                lbn = float(lbs[topn - 1]) if len(lbs) >= topn else None
                 meta[t] = (float(g["_ub"].max()), nb,
                            int(g["n_docs"].sum()),
                            int(g["first_doc"].min()),
@@ -2247,13 +2318,14 @@ class Engine:
         gmult = 1 << max(gmax.bit_length(), 1)
         params = (cmap, n_groups, topn, lo, span, 1, gmult, eg, False,
                   fused)
-        allpdf = kernel_core(pdfb, params, None)
+        allpdf = kernel_core(pdfb, params, dead)
         return self._finish_blocks(allpdf, topn, theta, n_groups, 1,
-                                   meta_rows)
+                                   meta_rows, "fast", len(dead))
 
     def _finish_blocks(self, allpdf: pd.DataFrame, topn: int,
                        theta: float, n_groups: int, n_shards: int,
-                       meta_rows: int
+                       meta_rows: int, path: str = "distributed",
+                       dead_ids: int = 0
                        ) -> tuple[pd.DataFrame, int, str, dict]:
         """Merge kernel output rows (shard-local top-n + sentinels)
         into (hits, total_hits, relation, per-call stats)."""
@@ -2268,7 +2340,8 @@ class Engine:
             "skipped_blocks": int(sent["n_skipped"].sum()),
             "lossy_blocks": int(sent["n_lossy"].sum()),
             "theta": theta, "n_shards": int(n_shards),
-            "meta_rows": int(meta_rows)}
+            "meta_rows": int(meta_rows), "path": path,
+            "dead_ids": int(dead_ids)}
         # totals are a lower bound whenever score-based pruning was
         # active: the driver-side theta filter, the in-kernel dynamic
         # theta (single-group), or the conjunctive dynamic floor

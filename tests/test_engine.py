@@ -672,3 +672,25 @@ def test_timeout_partial_results_df_plan(spark, tiny_build):
                            base.hits["score"].astype(float)), q
         assert timed.total_hits == base.total_hits, q
         assert timed.total_hits_relation == "eq", q
+
+
+def test_timeout_partial_results_default_plan(spark, tiny_build):
+    """The default (blocks) plan under an armed deadline skips the
+    one-shot driver fast path and streams the distributed kernel into
+    the partial sink, so a timeout still returns partial hits. An
+    armed-but-never-firing timeout must reproduce the untimed result
+    exactly (hits, order, totals) — the mirror of
+    test_timeout_partial_results_df_plan."""
+    c, cat, oidx, ix = tiny_build
+    eng = Engine(spark, ix)
+    for q in ["energy", '"items total" -momentum', "energy -momentum"]:
+        base = eng.search(q, k=10, with_fields=False)
+        timed = eng.search(q, k=10, with_fields=False, timeout_s=300)
+        assert base.blocks_stats["path"] == "fast", q
+        assert timed.blocks_stats["path"] == "distributed", q
+        assert [int(d) for d in timed.hits["doc_id"]] == \
+            [int(d) for d in base.hits["doc_id"]], q
+        assert np.allclose(timed.hits["score"].astype(float),
+                           base.hits["score"].astype(float)), q
+        assert timed.total_hits == base.total_hits, q
+        assert timed.total_hits_relation == base.total_hits_relation, q

@@ -1,6 +1,8 @@
 """Index maintenance: upsert (B6), delete (S6), annotate (S10) — checked
 by rebuilding the oracle over the logically-equivalent corpus."""
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -633,3 +635,191 @@ def test_upsert_pruned_dictionary_join(spark, tmp_path, monkeypatch):
     assert list(hits["pruned"]["path"]) == list(hits["plain"]["path"])
     assert np.allclose(hits["pruned"]["score"].astype(float),
                        hits["plain"]["score"].astype(float), atol=1e-9)
+
+
+# ------------------------------------------ tombstone-aware fast path
+
+_TOMB_QUERIES = ["energy", "electron quantum", '"items total"',
+                 "energy -momentum", corpus.render_math(corpus.EXACT_AST)]
+_job_groups = itertools.count()
+
+
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs it ran) — counted via a job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def tomb_ix(spark, tmp_path_factory):
+    """A 120-doc index after a delete and a MERGE upsert that
+    redelivers three live docs with changed content and adds ten new
+    ones: tombstones plus delta segments. Returns (index dir, the
+    equivalent live corpus)."""
+    c = corpus.make_corpus(120)
+    ix = str(tmp_path_factory.mktemp("tomb") / "ix120")
+    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
+    assert delete_by_path(spark, ix, "src/dir3/") > 0
+    live = c[~c["path"].str.startswith("src/dir3/")]
+    changed = live.iloc[[1, 5, 8]].copy()
+    changed["content"] = [
+        "<html><body><p>energy energy items total electron</p>"
+        "</body></html>",
+        "<html><body><p>quantum electron momentum energy</p>"
+        "</body></html>",
+        "<html><body><p>items total items total data</p></body></html>"]
+    extra = corpus.make_corpus(130).iloc[120:130]
+    delta = pd.concat([changed, extra], ignore_index=True)
+    assert upsert(spark, ix, spark.createDataFrame(delta)) == \
+        {"added": 13, "replaced": 3}
+    expected = pd.concat([live.drop(index=changed.index), delta],
+                         ignore_index=True)
+    return ix, expected
+
+
+def _ranked_keys(hits, keys):
+    """(score, doc_key) pairs in (score desc, doc_key) order: doc ids
+    differ between a maintained index and a fresh oracle build, so
+    exactly tied docs are compared by key, not by id."""
+    sc = np.round(hits["score"].to_numpy(np.float64), 6)
+    ks = list(keys.loc[[int(d) for d in hits["doc_id"]]])
+    return sorted(zip(-sc, ks))
+
+
+def test_tombstoned_fast_path_matches_oracle_and_distributed(
+        spark, tomb_ix, monkeypatch):
+    """With tombstones on the index, a cold hits-only default search
+    stays on the one-job driver fast path (the dead ids are masked in
+    the kernel, Lucene liveDocs style) and is rank-identical to the
+    oracle over the equivalent live corpus AND to the distributed plan
+    with its co-grouped tombstone channel (forced by shrinking
+    _SHARD_POSTINGS)."""
+    import mias_spark.search as S
+    ix, expected = tomb_ix
+    oidx = oracle.build_index(expected)
+    okeys = oidx.docs.set_index("doc_id")["doc_key"]
+    eng = Engine(spark, ix)
+    # opening the tables reads parquet footers (jobs of their own)
+    eng.search("data", k=1, with_fields=False)
+    store = (eng.cat.read("doc_store").select("doc_id", "doc_key")
+             .toPandas().set_index("doc_id")["doc_key"])
+    n_dead = eng.cat.tombstones().count()
+    fast = {}
+    for q in _TOMB_QUERIES:
+        r, n_jobs = _jobs_of(
+            spark, lambda: eng.search(q, k=10, with_fields=False))
+        assert r.blocks_stats["path"] == "fast", q
+        assert r.blocks_stats["dead_ids"] == n_dead, q
+        assert n_jobs == 1, q
+        assert len(r.hits), q
+        fast[q] = r
+        # complete hit sets: tie order at the k boundary is id-dependent
+        got = eng.search(q, k=10**6, with_fields=False).hits
+        exp = oracle.search(oidx, q, k=10**6)
+        assert _ranked_keys(got, store) == _ranked_keys(exp, okeys), q
+        assert np.allclose(np.sort(got["score"].astype(float)),
+                           np.sort(exp["score"].astype(float)),
+                           atol=1e-6), q
+    monkeypatch.setattr(S, "_SHARD_POSTINGS", 8)
+    dist = Engine(spark, ix)
+    for q in _TOMB_QUERIES:
+        r = dist.search(q, k=10, with_fields=False)
+        assert r.blocks_stats["path"] == "distributed", q
+        assert r.blocks_stats["dead_ids"] == -1, q
+        assert [int(d) for d in r.hits["doc_id"]] == \
+            [int(d) for d in fast[q].hits["doc_id"]], q
+        assert np.allclose(r.hits["score"].astype(float),
+                           fast[q].hits["score"].astype(float),
+                           atol=1e-9), q
+
+
+def test_cached_engine_fast_path_drops_deleted_doc(spark, tmp_path):
+    """A cached Engine memoizes the fast plan together with the dead
+    set of its snapshot. Deleting one of the hits commits a new
+    snapshot: the next search re-reads the dead set, stays on the fast
+    path, and the deleted doc never comes back through a memo."""
+    c = corpus.make_corpus(60)
+    ix = str(tmp_path / "ixmemo")
+    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
+    redeliver = c.iloc[[2, 4]].copy()
+    redeliver["content"] = ["<html><body><p>energy data</p></body></html>"
+                            ] * 2
+    upsert(spark, ix, spark.createDataFrame(redeliver))
+    eng = Engine(spark, ix, cache=True)
+    try:
+        r1 = eng.search("energy", k=5)
+        r2 = eng.search("energy", k=5)          # prepared-plan hit
+        assert r2.blocks_stats["meta_rows"] == 0
+        for r in (r1, r2):
+            assert r.blocks_stats["path"] == "fast"
+            assert r.blocks_stats["dead_ids"] == 2
+        assert list(r2.hits["path"]) == list(r1.hits["path"])
+        victim = r1.hits["path"].iloc[0]
+        assert delete_by_path(spark, ix, victim) == 1
+        for _ in range(2):                       # cold, then memo hit
+            r = eng.search("energy", k=5)
+            assert victim not in set(r.hits["path"])
+            assert r.blocks_stats["path"] == "fast"
+            assert r.blocks_stats["dead_ids"] == 3
+    finally:
+        eng.close()
+
+
+def test_theta_floor_skips_blocks_holding_dead_docs(spark, tmp_path):
+    """k=1 single-term query whose block-max achiever is tombstoned:
+    the fast path's theta floor may only come from blocks whose doc
+    range holds no dead id. A floor taken from the dead doc's block
+    would exceed the best live score and prune the block holding the
+    true top hit."""
+    import hashlib
+    n = 400                                      # 4 blocks of <= 128
+
+    def key(i):
+        return hashlib.sha256(
+            f"org/theta|d/f{i:05d}.md|{'0' * 40}".encode()).hexdigest()
+
+    # doc ids are dense in doc_key order: the first and last keys land
+    # in the first and last block of the term
+    order = sorted(range(n), key=key)
+    dead_i, top_i = order[0], order[-1]
+    rows = []
+    for i in range(n):
+        body = "zeta " + " ".join(f"w{i}x{j}" for j in range(2 + i % 5))
+        if i == dead_i:
+            body = "zeta " * 12                  # the block-max achiever
+        elif i == top_i:
+            body = "zeta zeta"                   # the best live doc
+        rows.append(("org/theta", f"d/f{i:05d}.md", "0" * 40, "markdown",
+                     body))
+    c = pd.DataFrame(rows, columns=["repo", "path", "commit", "lang",
+                                    "content"])
+    ix = str(tmp_path / "ixtheta")
+    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
+    dead_path = f"d/f{dead_i:05d}.md"
+    before = oracle.search(oracle.build_index(c), "zeta", k=2)
+    assert delete_by_path(spark, ix, dead_path) == 1
+    live = c[c["path"] != dead_path].reset_index(drop=True)
+    lidx = oracle.build_index(live)
+    exp = oracle.search(lidx, "zeta", k=1)
+    top_score = float(exp["score"].iloc[0])
+    # the deleted doc really was the achiever and outscores every live
+    # doc, so a floor taken from its block would prune the others
+    assert list(lidx.docs.set_index("doc_id")["path"]
+                .loc[exp["doc_id"]]) == [f"d/f{top_i:05d}.md"]
+    assert float(before["score"].iloc[0]) > \
+        float(before["score"].iloc[1]) > 0
+    eng = Engine(spark, ix)
+    r = eng.search("zeta", k=1)
+    assert r.blocks_stats["path"] == "fast"
+    assert r.blocks_stats["dead_ids"] == 1
+    # the floor stays armed (from the dead-free blocks) and sound
+    assert 0.0 < r.blocks_stats["theta"] <= top_score + 1e-9
+    assert list(r.hits["path"]) == [f"d/f{top_i:05d}.md"]
+    assert np.allclose(r.hits["score"].astype(float), [top_score],
+                       atol=1e-6)
