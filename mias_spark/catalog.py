@@ -118,11 +118,25 @@ class Catalog:
         w.parquet(self.path(table))
 
     def read(self, table: str, merge_schema: bool = False) -> DataFrame:
+        """The table as a DataFrame. On the parquet binding the schema
+        the manifest recorded for the table is handed to the reader, so
+        opening a table runs no schema-inference job; ``merge_schema``
+        and tables with no recorded schema keep inference."""
         if self._iceberg_ns():
             return self.spark.table(self._ident(table))
+        from pyspark.sql.types import StructType
         r = self.spark.read
+        sch = self.manifest()["tables"].get(table, {}).get("schema")
         if merge_schema:
             r = r.option("mergeSchema", "true")
+        elif sch is not None:
+            if not self._has_data_files(table):
+                # the legal empty state (see below), typed exactly as
+                # recorded: a schema-given read of a bare dir would
+                # succeed with every column made nullable
+                return self.spark.createDataFrame(
+                    [], StructType.fromJson(sch))
+            r = r.schema(StructType.fromJson(sch))
         try:
             return r.parquet(self.path(table))
         except Exception:
@@ -136,8 +150,6 @@ class Catalog:
             # (ADVICE r3, data-loss class).
             if self._has_data_files(table):
                 raise
-            from pyspark.sql.types import StructType
-            sch = self.manifest()["tables"].get(table, {}).get("schema")
             if sch is None:
                 raise
             return self.spark.createDataFrame(
@@ -154,6 +166,50 @@ class Catalog:
             if any(f.endswith(".parquet") for f in files):
                 return True
         return False
+
+    # ---------------------------------------------- driver-side reads
+    def arrow_dataset(self, table: str):
+        """pyarrow dataset over the table's parquet files with hive
+        partitioning: the one file listing a driver-side read needs
+        (callers that read a table often keep the handle). None on the
+        Iceberg binding, for a missing table dir, or when arrow cannot
+        list the files."""
+        if self._iceberg_ns() or not os.path.isdir(self.path(table)):
+            return None
+        import pyarrow as pa
+        import pyarrow.dataset as pds
+        try:
+            return pds.dataset(self.path(table), format="parquet",
+                               partitioning="hive")
+        except (OSError, pa.ArrowException):
+            return None
+
+    def read_local(self, table: str, columns: list[str],
+                   where: dict[str, list] | None = None, dset=None):
+        """Rows of ``table`` read DRIVER-SIDE with pyarrow as a pandas
+        frame: ``columns`` projected, ``where`` maps a column (partition
+        or data) to its allowed values, all ANDed — partition values
+        prune directories, data values prune row groups by their
+        statistics. For point reads (dictionary terms, tombstones, the
+        block rows of a small query, the k display docs), where a Spark
+        job would cost more than the read. ``dset``: an open
+        ``arrow_dataset`` handle, else one is opened. None on the
+        Iceberg binding, for a missing table, or when arrow cannot read
+        the files or lacks a column: callers fall back to Spark."""
+        if dset is None:
+            dset = self.arrow_dataset(table)
+            if dset is None:
+                return None
+        import pyarrow as pa
+        import pyarrow.dataset as pds
+        flt = None
+        for col, vals in (where or {}).items():
+            e = pds.field(col).isin(list(vals))
+            flt = e if flt is None else (flt & e)
+        try:
+            return dset.to_table(columns=columns, filter=flt).to_pandas()
+        except (OSError, pa.ArrowException):
+            return None
 
     def read_dictionary(self) -> DataFrame:
         """Merged dictionary view over the base + appended delta
@@ -345,18 +401,19 @@ class Catalog:
         import numpy as np
         if not self.has_table("tombstones"):
             return np.empty(0, np.int64)
-        if self._iceberg_ns():
-            return None
         import pyarrow as pa
-        import pyarrow.dataset as pds
+        dset = self.arrow_dataset("tombstones")
+        if dset is None:
+            return None
         try:
-            dset = pds.dataset(self.path("tombstones"), format="parquet")
             if dset.count_rows() > max_rows:
                 return None
-            ids = dset.to_table(columns=["doc_id"]).column("doc_id")
         except (OSError, pa.ArrowException):
             return None
-        return np.unique(ids.to_numpy().astype(np.int64))
+        pdf = self.read_local("tombstones", ["doc_id"], dset=dset)
+        if pdf is None:
+            return None
+        return np.unique(pdf["doc_id"].to_numpy().astype(np.int64))
 
     def add_tombstones(self, doc_ids: DataFrame) -> None:
         self.append(doc_ids.select("doc_id"), "tombstones")

@@ -50,6 +50,9 @@ CLAUSE_SCHEMA = ("term_id long, grp int, boost double, idf double, "
 #: monotonically increasing per-process sequence for job-group nonces
 _search_seq = itertools.count()
 
+#: display fields a with-fields search attaches to its hits
+DISPLAY_COLS = ["doc_id", "id", "repo", "path", "title"]
+
 
 @dataclass
 class SearchResult:
@@ -68,13 +71,16 @@ class SearchResult:
     #: blocks-mode stats for THIS query — skipped_blocks, lossy_blocks,
     #: theta, n_shards, meta_rows (metadata rows the driver pulled for
     #: this call; 0 on a memo hit), path (the plan that ran: "fast" =
-    #: one job collects the block rows and the whole pipeline runs
+    #: the block rows are fetched once and the whole pipeline runs
     #: driver-side, "driver" = single-shard kernel run driver-side
-    #: after the metadata job, "distributed" = sharded Spark kernel)
-    #: and dead_ids (size of the driver-side tombstone set the kernel
+    #: after the metadata job, "distributed" = sharded Spark kernel),
+    #: dead_ids (size of the driver-side tombstone set the kernel
     #: masked; -1 when tombstones/exclusions rode the co-grouped
-    #: channel instead). None for df-mode. Per-call value: concurrent
-    #: searches on one Engine each get their own.
+    #: channel instead) and read (how the block rows were fetched:
+    #: "arrow" = read driver-side with pyarrow, zero Spark jobs, the
+    #: fast path on the parquet binding; "spark" = a Spark job). None
+    #: for df-mode. Per-call value: concurrent searches on one Engine
+    #: each get their own.
     blocks_stats: dict | None = None
 
 
@@ -663,11 +669,15 @@ class Engine:
     it scans, so at 100 TB the cold buckets genuinely stay on disk
     (persisting the whole table would materialize everything on the
     first query, because a filter above an InMemoryRelation cannot
-    prune the underlying file scan). doc_store alone is persisted
-    whole (display fetches are k-row lookups; at real scale that
-    table belongs in a KV store or stays uncached). A commit on the
-    index (upsert/delete/compaction) is detected by snapshot version
-    at the next compile and drops every cache — the Lucene
+    prune the underlying file scan). On the parquet binding the
+    point reads (dictionary terms, tombstones, the block rows of a
+    query that fits one kernel shard, the k display docs) run
+    driver-side with pyarrow over dataset handles opened once per
+    snapshot, so a small query runs zero Spark jobs and doc_store is
+    never persisted; on the Iceberg binding the display fetch is a
+    Spark point read over a doc_store persisted whole. A commit on
+    the index (upsert/delete/compaction) is detected by snapshot
+    version at the next compile and drops every cache — the Lucene
     reopen-on-new-commit-point semantics, automated
     (``_refresh_if_stale``)."""
 
@@ -678,17 +688,17 @@ class Engine:
         list[int]) -> pandas.DataFrame`` returning (doc_id, id, repo,
         path, title[, content, lang]) rows. At 10^12 docs the k-row
         display fetch belongs in a point-lookup store (RocksDB /
-        Cassandra / a REST doc service), not a columnar scan; the
-        parquet dseg-pruned path stays the default. With a binding
-        set, the display fetch runs ZERO Spark jobs (snippets for the
-        k hit docs are extracted driver-side from the returned
-        content — k rows, the same budgeted extractor)."""
+        Cassandra / a REST doc service), not a columnar scan. Without
+        a binding the index's own doc_store serves the fetch: a
+        driver-side pyarrow read of the dseg partitions holding the k
+        ids on the parquet binding (zero Spark jobs), a Spark point
+        read on the Iceberg binding. Either way snippets for the k hit
+        docs are extracted driver-side from the returned content — k
+        rows, the same budgeted extractor."""
         self.spark = spark
         self.doc_kv = doc_kv
         self.cat = Catalog(spark, index_dir)
-        props = self.cat.props()
-        self.field_stats = props["field_stats"]
-        self.n_buckets = props["n_buckets"]
+        self._pin_props()
         self._cache = cache
         self._tables: dict[str, DataFrame] = {}
         self._slices: dict[tuple, DataFrame] = {}
@@ -697,6 +707,11 @@ class Engine:
         #: the table's files every time: 30-term math queries paid ~10 s
         #: of driver-side listing before this cache)
         self._bases: dict[str, DataFrame] = {}
+        #: pyarrow dataset handles (Catalog.arrow_dataset) for the
+        #: driver-side reads — ONE file listing per table per snapshot,
+        #: the arrow twin of _bases; None marks a table arrow cannot
+        #: serve (Iceberg binding, missing dir)
+        self._dsets: dict[str, object] = {}
         self._term_cache: dict[tuple[str, str], tuple | None] = {}
         #: (term_id, topn|None) -> reduced pruning metadata (ubm, nb,
         #: npost, blo, bhi, lbn) — O(1) per entry, never per-block
@@ -756,13 +771,27 @@ class Engine:
             self._block_meta = {}
             self._plans = {}
             self._bases = {}
+            self._dsets = {}
             self._dead = None
             if hasattr(self, "_blocks_pos_"):
                 del self._blocks_pos_
-            props = self.cat.props()
-            self.field_stats = props["field_stats"]
-            self.n_buckets = props["n_buckets"]
+            self._pin_props()
             self._snap = cur
+
+    def _pin_props(self) -> None:
+        """Index properties the pinned snapshot's searches read."""
+        props = self.cat.props()
+        self.field_stats = props["field_stats"]
+        self.n_buckets = props["n_buckets"]
+        self.doc_seg_shift = int(props.get("doc_seg_shift", 20))
+
+    def _dset(self, name: str):
+        """Memoized pyarrow dataset handle of a table (see _dsets)."""
+        with self._lock:
+            dsets = self._dsets
+            if name not in dsets:
+                dsets[name] = self.cat.arrow_dataset(name)
+            return dsets[name]
 
     def _table(self, name: str) -> DataFrame:
         if not self._cache:
@@ -843,6 +872,7 @@ class Engine:
             self._term_cache.clear()
             self._block_meta.clear()
             self._plans.clear()
+            self._dsets = {}
             self._dead = None
 
     def _dead_ids(self):
@@ -1003,40 +1033,26 @@ class Engine:
         (parquet binding only). Returns None to fall back to Spark.
         Segment semantics identical to read_dictionary: df summed per
         (field, term, term_id) across base + delta rows."""
-        import os
-        if self.cat._iceberg_ns():
+        dset = self._dset("dictionary")
+        if dset is None:
             return None
-        path = self.cat.path("dictionary")
-        if not os.path.isdir(path):
+        from mias_spark.build import N_DICT_BUCKETS
+        from mias_spark.hashing import dbucket_py
+        where = {"term": sorted({t for _f, t in todo})}
+        if "dbucket" in dset.schema.names:
+            where["dbucket"] = sorted({dbucket_py(f, t, N_DICT_BUCKETS)
+                                       for f, t in todo})
+        pdf = self.cat.read_local(
+            "dictionary", ["field", "term", "term_id", "df"], where, dset)
+        if pdf is None:
             return None
-        try:
-            import pyarrow.dataset as pds
-
-            from mias_spark.build import N_DICT_BUCKETS
-            from mias_spark.hashing import dbucket_py
-            dset = pds.dataset(path, format="parquet",
-                               partitioning="hive")
-            names = set(dset.schema.names)
-            flt = None
-            if "dbucket" in names:
-                dbuckets = sorted({dbucket_py(f, t, N_DICT_BUCKETS)
-                                   for f, t in todo})
-                flt = pds.field("dbucket").isin(dbuckets)
-            pair = None
-            for f, t in todo:
-                e = (pds.field("field") == f) & (pds.field("term") == t)
-                pair = e if pair is None else (pair | e)
-            flt = pair if flt is None else (flt & pair)
-            tbl = dset.to_table(
-                columns=["field", "term", "term_id", "df"], filter=flt)
-            pdf = tbl.to_pandas()
-            if len(pdf):
-                pdf = (pdf.groupby(["field", "term", "term_id"],
-                                   as_index=False)["df"].sum())
-            return {(r.field, r.term): (int(r.term_id), int(r.df))
-                    for r in pdf.itertuples()}
-        except Exception:
-            return None   # any arrow hiccup -> Spark path
+        want = set(todo)
+        pdf = pdf[[p in want for p in zip(pdf["field"], pdf["term"])]]
+        if len(pdf):
+            pdf = (pdf.groupby(["field", "term", "term_id"],
+                               as_index=False)["df"].sum())
+        return {(r.field, r.term): (int(r.term_id), int(r.df))
+                for r in pdf.itertuples()}
 
     # -------------------------------------------------------------- search
     def search(self, query_text: str, k: int = 10, offset: int = 0,
@@ -1317,47 +1333,22 @@ class Engine:
     def _assemble(self, hits, clauses, pplan, n_groups, processed, q,
                   total_hits, rel, bstats, with_fields, snippets,
                   debug) -> SearchResult:
-        """Shared Q10-Q12 result assembly: display-field fetch,
-        executor-side snippets, optional explain."""
+        """Shared Q10-Q12 result assembly: display-field fetch for the
+        k hits (the doc_kv binding, else _fetch_docs), driver-side
+        snippets over the k fetched docs, optional explain."""
         if (with_fields or snippets) and len(hits):
             ids = [int(d) for d in hits["doc_id"]]
-            cols = ["doc_id", "id", "repo", "path", "title"]
             if self.doc_kv is not None:
-                # KV-store seam: a k-row point lookup, zero Spark jobs
-                kv = self.doc_kv.get_many(ids)
-                if snippets:
-                    from mias_spec.snippets import make_snippet
-                    phrase_lists = [tuple(p.terms) for p in q.phrases
-                                    if not p.must_not]
-                    text_terms = sorted(
-                        {c.term for c in q.clauses
-                         if c.fld in ("content", "title")})
-                    mterms = {c.term for c in q.clauses
-                              if c.fld in ("pmath", "cmath")}
-                    kv = kv.assign(snippet=[
-                        make_snippet(ct, lg, text_terms, mterms,
-                                     phrase_lists)
-                        for ct, lg in zip(kv["content"], kv["lang"])])
-                    kv = kv[cols + ["snippet"]]
-                else:
-                    kv = kv[cols]
-                hits = hits.merge(kv, on="doc_id", how="left")
-                if debug and len(hits):
-                    hits["explain"] = self._explain(
-                        clauses, hits, n_groups, pplan)
-                return SearchResult(hits, n_groups, len(clauses),
-                                    processed, total_hits, rel, bstats)
-            disp_df = self._display_frame(ids)
+                docs = self.doc_kv.get_many(ids)
+            else:
+                docs = self._fetch_docs(ids, content=snippets)
+            cols = list(DISPLAY_COLS)
             if snippets:
-                # Q11 runs IN THE EXECUTORS: snippet extraction (XML
-                # parse + highlight per hit doc) rides a mapInPandas
-                # over the doc_store slice, so document content never
-                # reaches the driver and a large result page
-                # parallelizes like any other stage (the reference's
-                # snippet thread pool, Searching.java:314-399,
-                # re-expressed as a Spark stage). Phrase clauses
-                # highlight their contiguous occurrence as ONE span
-                # (they live in q.phrases, not q.clauses).
+                # Q11 over the k hit docs only, the reference's snippet
+                # pass over the result page (Searching.java:314-399).
+                # Phrase clauses highlight their contiguous occurrence
+                # as ONE span (they live in q.phrases, not q.clauses)
+                from mias_spec.snippets import make_snippet
                 phrase_lists = [tuple(p.terms) for p in q.phrases
                                 if not p.must_not]
                 text_terms = sorted(
@@ -1365,43 +1356,48 @@ class Engine:
                      if c.fld in ("content", "title")})
                 mterms = {c.term for c in q.clauses
                           if c.fld in ("pmath", "cmath")}
-
-                def snip(batches):
-                    from mias_spec.snippets import make_snippet
-                    for b in batches:
-                        b = b.reset_index(drop=True)
-                        b["snippet"] = [
-                            make_snippet(ct, lg, text_terms, mterms,
-                                         phrase_lists)
-                            for ct, lg in zip(b["content"], b["lang"])]
-                        yield b[cols + ["snippet"]]
-
-                disp = (disp_df.select(*cols, "content", "lang")
-                        .mapInPandas(
-                            snip,
-                            "doc_id long, id string, repo string, "
-                            "path string, title string, snippet string")
-                        .toPandas())
-            else:
-                disp = disp_df.select(*cols).toPandas()
-            hits = hits.merge(disp, on="doc_id", how="left")
+                docs = docs.assign(snippet=[
+                    make_snippet(ct, lg, text_terms, mterms, phrase_lists)
+                    for ct, lg in zip(docs["content"], docs["lang"])])
+                cols.append("snippet")
+            hits = hits.merge(docs[cols], on="doc_id", how="left")
         if debug and len(hits):
             hits["explain"] = self._explain(clauses, hits, n_groups, pplan)
         return SearchResult(hits, n_groups, len(clauses), processed,
                             total_hits, rel, bstats)
 
+    def _fetch_docs(self, ids: list[int], content: bool) -> pd.DataFrame:
+        """The default doc_kv: display rows (DISPLAY_COLS, plus content
+        and lang when ``content``) of the k hit docs from the index's
+        own doc_store. On the parquet binding a driver-side pyarrow
+        point read — the dseg partitions holding the ids, row groups
+        pruned by the doc_id filter — costs zero Spark jobs; the Spark
+        point read (_display_frame) serves the Iceberg binding and any
+        store arrow cannot read."""
+        cols = DISPLAY_COLS + (["content", "lang"] if content else [])
+        dset = self._dset("doc_store")
+        if dset is not None:
+            where = {"doc_id": ids}
+            if "dseg" in dset.schema.names:
+                where["dseg"] = sorted({d >> self.doc_seg_shift
+                                        for d in ids})
+            pdf = self.cat.read_local("doc_store", cols, where, dset)
+            if pdf is not None:
+                return pdf
+        return self._display_frame(ids).select(*cols).toPandas()
+
     def _display_frame(self, ids: list[int]) -> DataFrame:
-        """doc_store slice for the k hit docs. On a dseg-partitioned
-        store (build.py DOC_SEG_SHIFT) the fetch prunes to the <= k
-        doc-range partitions actually holding the ids — a k-row point
-        lookup must never list/scan the whole store (at 10^12 docs
-        that is the difference between milliseconds and a full
-        metadata pass; the documented KV seam remains the endgame).
-        Pre-dseg indexes fall back to the id filter alone."""
+        """doc_store slice for the k hit docs as a Spark frame. On a
+        dseg-partitioned store (build.py DOC_SEG_SHIFT) the fetch
+        prunes to the <= k doc-range partitions actually holding the
+        ids — a k-row point lookup must never list/scan the whole
+        store (at 10^12 docs that is the difference between
+        milliseconds and a full metadata pass; the documented KV seam
+        remains the endgame). Pre-dseg indexes fall back to the id
+        filter alone."""
         store = self._table("doc_store")
         if "dseg" in store.columns:
-            shift = int(self.cat.props().get("doc_seg_shift", 20))
-            segs = sorted({d >> shift for d in ids})
+            segs = sorted({d >> self.doc_seg_shift for d in ids})
             store = store.where(F.col("dseg").isin(segs))
         return store.where(F.col("doc_id").isin(ids))
 
@@ -1467,13 +1463,18 @@ class Engine:
     def _blocks_pos(self) -> bool:
         """True when the packed blocks carry pos_bytes (indexes built
         before round 4 don't; phrase queries then read the row
-        surface). Resolved once per Engine from the blocks schema."""
+        surface). Resolved once per snapshot from the blocks schema
+        (the arrow dataset's on the parquet binding: no Spark job)."""
         if not hasattr(self, "_blocks_pos_"):
-            try:
-                self._blocks_pos_ = "pos_bytes" in \
-                    self._base("blocks").columns
-            except Exception:
-                self._blocks_pos_ = False
+            dset = self._dset("blocks")
+            if dset is not None:
+                self._blocks_pos_ = "pos_bytes" in dset.schema.names
+            else:
+                try:
+                    self._blocks_pos_ = "pos_bytes" in \
+                        self._base("blocks").columns
+                except Exception:
+                    self._blocks_pos_ = False
         return self._blocks_pos_
 
     def _phrase_postings(self, tids: list[int], surface: str = "rows"):
@@ -1753,11 +1754,15 @@ class Engine:
             hit = self._plan_get(pkey)
             if hit is not None:
                 if hit[-1] == "fast":
-                    bdf_m, cl_m, cmap_m, mb_m, fu_m, dead_m, _ = hit
-                    # metadata came from the memo: meta_rows 0
+                    # the memo holds the read spec, never the rows:
+                    # a hit re-reads them (driver memory stays bounded
+                    # by the plan LRU); metadata came from the memo, so
+                    # meta_rows is 0
+                    spec_m, cl_m, cmap_m, mb_m, fu_m, dead_m, _ = hit
+                    pdfb, read = self._fast_rows(*spec_m, fu_m, cmap_m)
                     return self._topk_blocks_local(
-                        bdf_m, cl_m, cmap_m, mb_m, topn, n_groups, None,
-                        dead_m, memo_hit=True, fused=fu_m)
+                        pdfb, cl_m, cmap_m, mb_m, topn, n_groups,
+                        dead_m, memo_hit=True, fused=fu_m, read=read)
                 # pdead: the dead-id array (driver) or the dead_ids
                 # stat (dist) the plan was built with
                 plan, pparams, ptheta, pshards, pdead, kind = hit
@@ -1772,27 +1777,60 @@ class Engine:
                        "distributed", pdead)
                 allpdf = self._collect_kernel(plan, partial_sink, ctx)
                 return self._finish_blocks(allpdf, *ctx)
-        terms = [int(t) for t in set(clauses["term_id"])]
-        buckets = [int(b) for b in set(clauses["bucket"])]
-        # column-prune the scoring scan: the kernel never reads
-        # pos_bytes for SCORING (positions serve phrase adjacency
-        # only) and the partition column is spent after pruning —
-        # dropping them here keeps the biggest per-posting payload out
-        # of the scan, the shard shuffle, the Arrow transfer and the
-        # cached slices (drop is a no-op on pre-pos_bytes tables).
-        # Phrase terms' blocks arrive through _fused_extras with
-        # pos_bytes attached; a phrase-only query has no scoring scan
-        bdf = None
-        if terms:
-            bdf = (self._pruned("blocks", "bucket", buckets)
-                   .where(F.col("term_id").isin(terms))
-                   .drop("pos_bytes", "bucket"))
+        terms = sorted({int(t) for t in clauses["term_id"]})
+        buckets = sorted({int(b) for b in clauses["bucket"]})
         cmap: dict[int, list[tuple[int, float]]] = {}
         for r in clauses.itertuples():
             cmap.setdefault(int(r.term_id), []).append(
                 (int(r.grp), float(r.boost)))
         max_boost = {t: max(b for _, b in es) for t, es in cmap.items()}
 
+        # liveDocs: the snapshot's tombstone ids as a driver-side array
+        # when small (None: too many, or Iceberg — co-grouped below)
+        dead = self._dead_ids()
+        clean = dead is not None and not len(dead)
+        # the one-shot driver paths need the dead set in hand and no
+        # deadline (their single collect cannot return partial hits)
+        local_ok = dead is not None and not streaming
+        # ---- small-query fast path: the dictionary df already bounds
+        # the posting volume (scoring AND phrase/banned terms — their
+        # dfs ride pplan.extra_df_total), so when the whole query fits
+        # one shard the block rows are fetched once — driver-side with
+        # pyarrow on the parquet binding (zero Spark jobs), one Spark
+        # collect otherwise — and metadata reduction, theta, range
+        # filters, the fused phrase pre-pass and the kernel (masking
+        # the dead ids) all run driver-side on that frame. The check
+        # needs no Spark frame, so none is built for a fast query.
+        extra_df = int(pplan.get("extra_df_total", 0)) if fused else 0
+        df_total = (int(clauses.drop_duplicates("term_id")["df"].sum())
+                    if "df" in clauses.columns and len(clauses) else
+                    (0 if fused else None))
+        if (local_ok and df_total is not None
+                and df_total + extra_df <= _SHARD_POSTINGS
+                and banned_df is None
+                and (n_pgroups == 0 or fused is not None)):
+            if pkey is not None:
+                self._plan_put(pkey, ((terms, buckets), clauses, cmap,
+                                      max_boost, fused, dead, "fast"))
+            pdfb, read = self._fast_rows(terms, buckets, fused, cmap)
+            return self._topk_blocks_local(pdfb, clauses, cmap,
+                                           max_boost, topn, n_groups,
+                                           dead, fused=fused, read=read)
+        # column-prune the scoring scan: the kernel never reads
+        # pos_bytes for SCORING (positions serve phrase adjacency
+        # only) and the partition column is spent after pruning.
+        # Phrase terms' blocks arrive through _fused_extras with
+        # pos_bytes attached; a phrase-only query has no scoring scan
+        bdf = self._scoring_frame(terms, buckets) if terms else None
+        tomb = None if clean else self.cat.tombstones()
+        # a tombstoned/banned doc may be the block-max achiever, so the
+        # Spark-side floor is only a valid lower bound on a CLEAN
+        # unfiltered single-term-group query (the fast path filters
+        # dead-holding blocks out of its floor instead); `optimize`
+        # restores pruning after deletes
+        need_theta = (n_groups == 1 and tomb is None
+                      and banned_df is None and n_pgroups == 0
+                      and fused is None)
         # ---- driver metadata: ONE bounded row per term, never O(df).
         # The rescaled (query-fresh idf/avgdl) bounds are computed as
         # Catalyst expressions and reduced Spark-side: a window rank
@@ -1807,48 +1845,6 @@ class Engine:
         # fresh idf/avgdl are pinned for the Engine's snapshot, so the
         # adjusted bounds are constants and a repeat term costs ZERO
         # Spark jobs.
-        if bdf is not None:
-            for c in ("idf0", "avgdl0"):  # pre-snapshot index: scale = 1
-                if c not in bdf.columns:
-                    bdf = bdf.withColumn(c, F.lit(None).cast("double"))
-        # liveDocs: the snapshot's tombstone ids as a driver-side array
-        # when small (None: too many, or Iceberg — co-grouped below)
-        dead = self._dead_ids()
-        clean = dead is not None and not len(dead)
-        # the one-shot driver paths need the dead set in hand and no
-        # deadline (their single collect cannot return partial hits)
-        local_ok = dead is not None and not streaming
-        # ---- small-query fast path: the dictionary df already bounds
-        # the posting volume (scoring AND phrase/banned terms — their
-        # dfs ride pplan.extra_df_total), so when the whole query fits
-        # one shard ONE job collects the block rows — metadata
-        # reduction, theta, range filters, the fused phrase pre-pass
-        # and the kernel (masking the dead ids) all run driver-side on
-        # that frame. Cold interactive searches drop from 3 sequential
-        # jobs (dictionary, metadata agg, kernel) to 2.
-        extra_df = int(pplan.get("extra_df_total", 0)) if fused else 0
-        df_total = (int(clauses.drop_duplicates("term_id")["df"].sum())
-                    if "df" in clauses.columns and len(clauses) else
-                    (0 if fused else None))
-        if (local_ok and df_total is not None
-                and df_total + extra_df <= _SHARD_POSTINGS
-                and banned_df is None
-                and (n_pgroups == 0 or fused is not None)):
-            bdf_l = bdf
-            if fused:
-                bdf_l = self._fused_union(bdf, fused, cmap)
-            return self._topk_blocks_local(bdf_l, clauses, cmap,
-                                           max_boost, topn, n_groups,
-                                           pkey, dead, fused=fused)
-        tomb = None if clean else self.cat.tombstones()
-        # a tombstoned/banned doc may be the block-max achiever, so the
-        # Spark-side floor is only a valid lower bound on a CLEAN
-        # unfiltered single-term-group query (the fast path filters
-        # dead-holding blocks out of its floor instead); `optimize`
-        # restores pruning after deletes
-        need_theta = (n_groups == 1 and tomb is None
-                      and banned_df is None and n_pgroups == 0
-                      and fused is None)
         fresh_df = fresh_stats_df(self.spark, clauses)
         adj_ub, _adj_lb = rescaled_bounds()
         ckey = topn if need_theta else None
@@ -1886,7 +1882,7 @@ class Engine:
             return empty, 0, "eq", {
                 "skipped_blocks": 0, "lossy_blocks": 0, "theta": 0.0,
                 "n_shards": 0, "meta_rows": meta_rows,
-                "path": "distributed", "dead_ids": 0}
+                "path": "distributed", "dead_ids": 0, "read": "spark"}
         if mrows:
             lo = min(int(r["blo"]) for r in mrows)
             hi = max(int(r["bhi"]) for r in mrows)
@@ -2147,10 +2143,84 @@ class Engine:
                             & (F.col("first_doc") <= hi))
         return out
 
+    def _scoring_frame(self, terms: list[int], buckets: list[int]
+                       ) -> DataFrame:
+        """Bucket- and term-pruned Spark scan of the scoring terms'
+        blocks, pos_bytes and the spent partition column dropped (the
+        biggest per-posting payload stays out of the scan, the shard
+        shuffle, the Arrow transfer and the cached slices; the drop is
+        a no-op on pre-pos_bytes tables). Pre-snapshot indexes get null
+        idf0/avgdl0, i.e. bound scale 1."""
+        bdf = (self._pruned("blocks", "bucket", buckets)
+               .where(F.col("term_id").isin(terms))
+               .drop("pos_bytes", "bucket"))
+        for c in ("idf0", "avgdl0"):
+            if c not in bdf.columns:
+                bdf = bdf.withColumn(c, F.lit(None).cast("double"))
+        return bdf
+
+    def _fast_rows(self, terms: list[int], buckets: list[int],
+                   fused: dict | None, cmap: dict
+                   ) -> tuple[pd.DataFrame, str]:
+        """(block rows, how they were read) for a fast-path query: the
+        pyarrow read when it can serve them ("arrow", zero Spark jobs),
+        else one Spark collect of the same rows ("spark")."""
+        pdfb = self._blocks_arrow(terms, fused, cmap)
+        if pdfb is not None:
+            return pdfb, "arrow"
+        bdf = self._scoring_frame(terms, buckets) if terms else None
+        if fused:
+            bdf = self._fused_union(bdf, fused, cmap)
+        return bdf.toPandas(), "spark"
+
+    def _blocks_arrow(self, terms: list[int], fused: dict | None,
+                      cmap: dict) -> pd.DataFrame | None:
+        """The fast path's block rows read driver-side with pyarrow:
+        the frame ``_fused_union(...).toPandas()`` (or the scoring
+        scan's, unfused) would collect — same columns, dtypes and
+        nulls; row order is irrelevant to the kernel. Scoring terms
+        read every column but pos_bytes (null when fused), phrase
+        terms keep pos_bytes, banned-only terms read doc_bytes alone
+        with null tf/dl/w/pos bytes. None when arrow cannot serve the
+        read: Iceberg binding, unreadable files, or blocks lacking any
+        column of the current format."""
+        dset = self._dset("blocks")
+        if dset is None or not set(blk._COLS) <= set(dset.schema.names):
+            return None
+        nb = self.n_buckets
+
+        def read(tids, cols):
+            return self.cat.read_local(
+                "blocks", cols, {"bucket": sorted({t % nb for t in tids}),
+                                 "term_id": tids}, dset)
+
+        score_cols = [c for c in blk._COLS if c != "pos_bytes"]
+        ptids = fused["ptids"] if fused else frozenset()
+        # (tids, columns read, columns nulled)
+        reads = [([t for t in terms if t not in ptids], score_cols,
+                  ["pos_bytes"] if fused else [])]
+        if fused:
+            banned = sorted(fused["banned_set"] - ptids - set(cmap))
+            unread = ["tf_bytes", "dl_bytes", "w_bytes", "pos_bytes"]
+            reads += [(sorted(ptids), blk._COLS, []),
+                      (banned, [c for c in blk._COLS if c not in unread],
+                       unread)]
+        parts = []
+        for tids, cols, nulls in reads:
+            if not tids:
+                continue
+            pdf = read(tids, cols)
+            if pdf is None:
+                return None
+            parts.append(pdf.assign(**dict.fromkeys(nulls)))
+        return pd.concat(parts, ignore_index=True)[
+            blk._COLS if fused else score_cols]
+
     def _fused_union(self, bdf: DataFrame | None, fused: dict,
                      cmap: dict) -> DataFrame:
         """Scoring scan (pos nulled, phrase-overlap terms removed) +
-        fused extras — the driver fast path's collect source."""
+        fused extras — the driver fast path's Spark read when arrow
+        cannot serve it."""
         parts = []
         if bdf is not None:
             overlap = sorted(set(cmap) & fused["ptids"])
@@ -2186,16 +2256,17 @@ class Engine:
         return pd.DataFrame(rows, columns=[
             "doc_id", "score", "n_hits", "n_skipped", "n_lossy"])
 
-    def _topk_blocks_local(self, bdf: DataFrame, clauses: pd.DataFrame,
-                           cmap: dict, max_boost: dict, topn: int,
-                           n_groups: int, pkey, dead: np.ndarray,
-                           memo_hit: bool = False,
-                           fused: dict | None = None,
+    def _topk_blocks_local(self, pdfb: pd.DataFrame,
+                           clauses: pd.DataFrame, cmap: dict,
+                           max_boost: dict, topn: int, n_groups: int,
+                           dead: np.ndarray, memo_hit: bool = False,
+                           fused: dict | None = None, read: str = "arrow",
                            ) -> tuple[pd.DataFrame, int, str, dict]:
         """Driver-side mirror of the _topk_blocks pruning pipeline for
         queries whose dictionary df already bounds the posting volume
-        to one shard's worth: ONE job collects the few compressed block
-        rows, then metadata reduction, the theta floor, conjunctive
+        to one shard's worth: on the few compressed block rows
+        (``pdfb``, see _fast_rows; ``read`` says how they were
+        fetched), metadata reduction, the theta floor, conjunctive
         range filters, the fused phrase pre-pass and the kernel all run
         on the local frame. ``dead`` (sorted tombstone ids) is masked
         in the kernel, and blocks whose doc range holds a dead id are
@@ -2205,15 +2276,11 @@ class Engine:
         and test_tombstoned_fast_path_matches_oracle_and_distributed."""
         empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                               "score": pd.Series(dtype="float64")})
-        pdfb = bdf.toPandas()
-        if pkey is not None:
-            self._plan_put(pkey, (bdf, clauses, cmap, max_boost, fused,
-                                  dead, "fast"))
         if not len(pdfb):
             return empty, 0, "eq", {
                 "skipped_blocks": 0, "lossy_blocks": 0, "theta": 0.0,
                 "n_shards": 0, "meta_rows": 0, "path": "fast",
-                "dead_ids": int(len(dead))}
+                "dead_ids": int(len(dead)), "read": read}
         imap = {int(r.term_id): (float(r.idf), float(r.avgdl))
                 for r in clauses.drop_duplicates("term_id").itertuples()}
         # fused extras (phrase/banned-term blocks) skip the scoring
@@ -2320,12 +2387,12 @@ class Engine:
                   fused)
         allpdf = kernel_core(pdfb, params, dead)
         return self._finish_blocks(allpdf, topn, theta, n_groups, 1,
-                                   meta_rows, "fast", len(dead))
+                                   meta_rows, "fast", len(dead), read)
 
     def _finish_blocks(self, allpdf: pd.DataFrame, topn: int,
                        theta: float, n_groups: int, n_shards: int,
                        meta_rows: int, path: str = "distributed",
-                       dead_ids: int = 0
+                       dead_ids: int = 0, read: str = "spark"
                        ) -> tuple[pd.DataFrame, int, str, dict]:
         """Merge kernel output rows (shard-local top-n + sentinels)
         into (hits, total_hits, relation, per-call stats)."""
@@ -2341,7 +2408,7 @@ class Engine:
             "lossy_blocks": int(sent["n_lossy"].sum()),
             "theta": theta, "n_shards": int(n_shards),
             "meta_rows": int(meta_rows), "path": path,
-            "dead_ids": int(dead_ids)}
+            "dead_ids": int(dead_ids), "read": read}
         # totals are a lower bound whenever score-based pruning was
         # active: the driver-side theta filter, the in-kernel dynamic
         # theta (single-group), or the conjunctive dynamic floor

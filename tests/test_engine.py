@@ -175,6 +175,25 @@ def test_blocks_mode_offset_and_conjunction(spark, tiny_build):
         [int(d) for d in full["doc_id"][5:10]]
 
 
+def test_catalog_read_uses_recorded_schema(spark, tiny_build, jobs_of):
+    """Opening a table on the parquet binding runs no schema-inference
+    job: the manifest's recorded schema is handed to the reader, and
+    the partition columns come back with their recorded types.
+    merge_schema keeps inference. (The 64-partition dictionary is left
+    out: past 32 partition dirs Spark lists the files in a job of its
+    own, schema or not.)"""
+    from pyspark.sql.types import StructType
+    c, cat, oidx, ix = tiny_build
+    for table, part in (("blocks", "bucket"), ("doc_store", "dseg")):
+        df, n_jobs = jobs_of(lambda: cat.read(table))
+        assert n_jobs == 0, table
+        rec = StructType.fromJson(cat.manifest()["tables"][table]["schema"])
+        assert df.schema[part].dataType == rec[part].dataType, table
+        assert set(df.columns) == set(rec.names), table
+    assert cat.read("blocks").count() == \
+        cat.read("blocks", merge_schema=True).count()
+
+
 def test_meta_tables_queryable(spark, tiny_build):
     """North rule: lineage + metrics + per-partition checkpoints exist
     as queryable tables, not just manifest JSON."""

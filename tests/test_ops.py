@@ -1,8 +1,6 @@
 """Index maintenance: upsert (B6), delete (S6), annotate (S10) — checked
 by rebuilding the oracle over the logically-equivalent corpus."""
 
-import itertools
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -641,48 +639,6 @@ def test_upsert_pruned_dictionary_join(spark, tmp_path, monkeypatch):
 
 _TOMB_QUERIES = ["energy", "electron quantum", '"items total"',
                  "energy -momentum", corpus.render_math(corpus.EXACT_AST)]
-_job_groups = itertools.count()
-
-
-def _jobs_of(spark, fn):
-    """(fn(), number of Spark jobs it ran) — counted via a job group."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{next(_job_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-@pytest.fixture(scope="module")
-def tomb_ix(spark, tmp_path_factory):
-    """A 120-doc index after a delete and a MERGE upsert that
-    redelivers three live docs with changed content and adds ten new
-    ones: tombstones plus delta segments. Returns (index dir, the
-    equivalent live corpus)."""
-    c = corpus.make_corpus(120)
-    ix = str(tmp_path_factory.mktemp("tomb") / "ix120")
-    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
-    assert delete_by_path(spark, ix, "src/dir3/") > 0
-    live = c[~c["path"].str.startswith("src/dir3/")]
-    changed = live.iloc[[1, 5, 8]].copy()
-    changed["content"] = [
-        "<html><body><p>energy energy items total electron</p>"
-        "</body></html>",
-        "<html><body><p>quantum electron momentum energy</p>"
-        "</body></html>",
-        "<html><body><p>items total items total data</p></body></html>"]
-    extra = corpus.make_corpus(130).iloc[120:130]
-    delta = pd.concat([changed, extra], ignore_index=True)
-    assert upsert(spark, ix, spark.createDataFrame(delta)) == \
-        {"added": 13, "replaced": 3}
-    expected = pd.concat([live.drop(index=changed.index), delta],
-                         ignore_index=True)
-    return ix, expected
-
-
 def _ranked_keys(hits, keys):
     """(score, doc_key) pairs in (score desc, doc_key) order: doc ids
     differ between a maintained index and a fresh oracle build, so
@@ -693,10 +649,11 @@ def _ranked_keys(hits, keys):
 
 
 def test_tombstoned_fast_path_matches_oracle_and_distributed(
-        spark, tomb_ix, monkeypatch):
+        spark, tomb_ix, jobs_of, monkeypatch):
     """With tombstones on the index, a cold hits-only default search
-    stays on the one-job driver fast path (the dead ids are masked in
-    the kernel, Lucene liveDocs style) and is rank-identical to the
+    stays on the zero-job driver fast path (the dead ids are masked in
+    the kernel, Lucene liveDocs style; the block rows are read with
+    pyarrow) and is rank-identical to the
     oracle over the equivalent live corpus AND to the distributed plan
     with its co-grouped tombstone channel (forced by shrinking
     _SHARD_POSTINGS)."""
@@ -712,11 +669,12 @@ def test_tombstoned_fast_path_matches_oracle_and_distributed(
     n_dead = eng.cat.tombstones().count()
     fast = {}
     for q in _TOMB_QUERIES:
-        r, n_jobs = _jobs_of(
-            spark, lambda: eng.search(q, k=10, with_fields=False))
+        r, n_jobs = jobs_of(
+            lambda: eng.search(q, k=10, with_fields=False))
         assert r.blocks_stats["path"] == "fast", q
+        assert r.blocks_stats["read"] == "arrow", q
         assert r.blocks_stats["dead_ids"] == n_dead, q
-        assert n_jobs == 1, q
+        assert n_jobs == 0, q
         assert len(r.hits), q
         fast[q] = r
         # complete hit sets: tie order at the k boundary is id-dependent
@@ -739,11 +697,14 @@ def test_tombstoned_fast_path_matches_oracle_and_distributed(
                            atol=1e-9), q
 
 
-def test_cached_engine_fast_path_drops_deleted_doc(spark, tmp_path):
+def test_cached_engine_fast_path_drops_deleted_doc(spark, tmp_path,
+                                                  jobs_of):
     """A cached Engine memoizes the fast plan together with the dead
     set of its snapshot. Deleting one of the hits commits a new
-    snapshot: the next search re-reads the dead set, stays on the fast
-    path, and the deleted doc never comes back through a memo."""
+    snapshot: the next search re-reads the dead set and reopens its
+    arrow dataset handles, stays on the zero-job fast path, and the
+    deleted doc never comes back through a memo. A later upsert's new
+    doc is found through the reopened handles."""
     c = corpus.make_corpus(60)
     ix = str(tmp_path / "ixmemo")
     build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
@@ -763,10 +724,25 @@ def test_cached_engine_fast_path_drops_deleted_doc(spark, tmp_path):
         victim = r1.hits["path"].iloc[0]
         assert delete_by_path(spark, ix, victim) == 1
         for _ in range(2):                       # cold, then memo hit
-            r = eng.search("energy", k=5)
+            r, n_jobs = jobs_of(lambda: eng.search("energy", k=5))
             assert victim not in set(r.hits["path"])
+            assert r.hits["path"].notna().all()
             assert r.blocks_stats["path"] == "fast"
+            assert r.blocks_stats["read"] == "arrow"
             assert r.blocks_stats["dead_ids"] == 3
+            assert n_jobs == 0
+        # an upsert appends dictionary, block and doc_store files: a
+        # search on the cached Engine must list them, not serve the
+        # file listing of the snapshot it opened on
+        assert not len(eng.search("quasarion", k=5).hits)
+        new = corpus.make_corpus(61).iloc[60:].copy()
+        new["content"] = ["<html><body><p>quasarion energy</p>"
+                          "</body></html>"]
+        upsert(spark, ix, spark.createDataFrame(new))
+        r, n_jobs = jobs_of(lambda: eng.search("quasarion", k=5))
+        assert list(r.hits["path"]) == list(new["path"])
+        assert r.blocks_stats["read"] == "arrow"
+        assert n_jobs == 0
     finally:
         eng.close()
 
