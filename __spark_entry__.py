@@ -2,7 +2,7 @@
 
 ``entry(spark)`` — flagship: ingest the sf0.001 ``documents`` table as a
 corpus, build the full inverted index (doc_ids, M-term/text tokenize,
-postings, packed blocks) and run a BM25 top-k search through the engine.
+packed posting blocks) and run a BM25 top-k search through the engine.
 
 ``queries()`` / ``oracle_sql()`` — the oracle-checked operator suite
 (mias_spark/pipelines/suite.py): IR core (tf/df/norms/BM25 top-k incl.

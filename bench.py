@@ -4,7 +4,7 @@ Measures the engine's two headline paths at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]:
 
   build_index        full inverted-index build (ingest -> Arrow tokenize
-                     -> norms/dictionary/postings -> packed delta-gap
+                     -> norms/dictionary -> packed delta-gap
                      varint blocks) over the documents table plus a
                      deterministic synthesized MathML corpus — the
                      BASELINE.json metric is docs/sec, reported in the

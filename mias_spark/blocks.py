@@ -32,6 +32,13 @@ compression; block-max metadata for WAND-style pruning):
 
 Weights themselves were 16-bit-quantized at token emission (codec.py);
 wsum is their exact float64 sum, so no further precision is lost.
+
+Blocks are the index's ONE posting surface (the Lucene .doc/.pos
+analog): no exploded posting-row or token table is persisted. Every
+consumer that needs posting rows — the df reference plan, explain,
+compaction's repack, the tests — reads them through ``decode_postings``
+(``posting_rows`` as a mapInPandas fn), which is lossless for (term_id,
+doc_id, tf, wsum, dl) and for positions wherever pos_bytes is packed.
 """
 
 from __future__ import annotations
@@ -120,10 +127,8 @@ def _pack_frame(g: pd.DataFrame, with_positions: bool = True
     # cross-block or cross-doc dependency), gaps within a doc (>= 0:
     # unified M-term variants share positions). len(positions) == tf,
     # so the decoder recovers per-doc runs from tf_bytes alone.
-    # ``with_positions=False`` is the bench-attribution path (VERDICT
-    # r4 #3): it skips the position encode entirely so the feature's
-    # build cost is a measured number — tables built this way omit the
-    # column and the engine serves phrases from the row surface.
+    # ``with_positions=False`` (non-positional fields, see
+    # _pack_frame_split) skips the encode and leaves pos_bytes null.
     if with_positions:
         pstarts = np.cumsum(tfs) - tfs        # row -> first flat pos
         pgaps = np.empty(len(pos_flat), dtype=np.int64)
@@ -215,20 +220,6 @@ def pack_sorted_partition(
     yield from _pack_iter(batches, _pack_frame_split)
 
 
-#: bench-attribution variant (VERDICT r4 #3): identical pack minus the
-#: position encode; the emitted table has NO pos_bytes column, so the
-#: engine detects it (`_blocks_pos` False) and serves phrases from the
-#: postings rows — exactly the round-3 format.
-BLOCKS_SCHEMA_NOPOS = BLOCKS_SCHEMA.replace(", pos_bytes binary", "")
-
-
-def pack_sorted_partition_nopos(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for out in _pack_iter(batches, lambda g: _pack_frame(g, False)):
-        yield out.drop(columns=["pos_bytes"])
-
-
 def unpack_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """(doc_ids, tfs, dls, wsums) from one packed block row."""
     n = int(row.n_docs)
@@ -242,12 +233,91 @@ def unpack_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
 def unpack_positions(row, tfs: np.ndarray | None = None) -> np.ndarray:
     """Flat per-doc-run positions of one block (run lengths = the tfs;
     pass them if already decoded to skip a second tf_bytes pass)."""
-    n = int(row.n_docs)
     if tfs is None:
-        tfs = codec.decode_varints(row.tf_bytes, n).astype(np.int64)
+        tfs = codec.decode_varints(row.tf_bytes, int(row.n_docs)) \
+            .astype(np.int64)
+    return _decode_positions(row.pos_bytes, tfs)
+
+
+def _decode_positions(pos_bytes: bytes, tfs: np.ndarray) -> np.ndarray:
     npos = int(tfs.sum())
-    gaps = codec.decode_varints(row.pos_bytes, npos).astype(np.int64)
+    gaps = codec.decode_varints(pos_bytes, npos).astype(np.int64)
     cs = np.cumsum(gaps)
     starts = np.cumsum(tfs) - tfs
     base = np.repeat(cs[starts] - gaps[starts], tfs)
     return cs - base
+
+
+# ------------------------------------------------------ posting decoder
+
+#: decodable posting-row columns -> (block column they need, Spark type)
+POSTING_COLS = {"tf": ("tf_bytes", "long"), "wsum": ("w_bytes", "double"),
+                "dl": ("dl_bytes", "long"),
+                "positions": ("pos_bytes", "array<int>")}
+ALL_POSTING_COLS = tuple(POSTING_COLS)
+
+
+def posting_rows_schema(cols: tuple = ALL_POSTING_COLS) -> str:
+    return ", ".join(["term_id long", "doc_id long"]
+                     + [f"{c} {POSTING_COLS[c][1]}" for c in cols])
+
+
+def _cat(parts: list, dtype) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.empty(0, dtype)
+
+
+def decode_postings(pdf: pd.DataFrame,
+                    cols: tuple = ALL_POSTING_COLS) -> pd.DataFrame:
+    """Block rows -> one row per posting: (term_id, doc_id, *cols).
+    Only the byte columns ``cols`` need are decoded (and need be
+    present in ``pdf``: term_id, n_docs and doc_bytes always, tf_bytes
+    for tf or positions, w_bytes for wsum, dl_bytes for dl, pos_bytes
+    for positions). ``positions`` is an int32 array per posting where
+    the block packs pos_bytes and None where it does not (math
+    fields)."""
+    n = pdf["n_docs"].to_numpy(np.int64)
+    out = {"term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), n),
+           "doc_id": _cat([codec.decode_doc_ids(b, k) for b, k in
+                           zip(pdf["doc_bytes"], n)], np.int64)}
+    if "tf" in cols or "positions" in cols:
+        tfs = [codec.decode_varints(b, k).astype(np.int64)
+               for b, k in zip(pdf["tf_bytes"], n)]
+        if "tf" in cols:
+            out["tf"] = _cat(tfs, np.int64)
+    if "wsum" in cols:
+        out["wsum"] = _cat([np.frombuffer(b, dtype="<f8")
+                            for b in pdf["w_bytes"]], np.float64)
+    if "dl" in cols:
+        out["dl"] = _cat([codec.decode_varints(b, k).astype(np.int64)
+                          for b, k in zip(pdf["dl_bytes"], n)], np.int64)
+    if "positions" in cols:
+        pos: list = []
+        for pb, t in zip(pdf["pos_bytes"], tfs):
+            if isinstance(pb, (bytes, bytearray)):
+                flat = _decode_positions(pb, t).astype(np.int32)
+                pos.extend(np.split(flat, np.cumsum(t)[:-1]))
+            else:
+                pos.extend([None] * len(t))
+        out["positions"] = pos
+    return pd.DataFrame(out, columns=["term_id", "doc_id", *cols])
+
+
+def posting_rows(cols: tuple = ALL_POSTING_COLS):
+    """mapInPandas fn: block rows -> decode_postings rows (output
+    schema ``posting_rows_schema(cols)``)."""
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                yield decode_postings(pdf, cols)
+    return fn
+
+
+def decoded_postings(bdf, cols: tuple = ALL_POSTING_COLS):
+    """Spark frame of posting rows decoded from a (pruned) blocks
+    frame; only the block columns ``cols`` need are scanned."""
+    need = ["term_id", "n_docs", "doc_bytes"] + [
+        POSTING_COLS[c][0] for c in cols]
+    if "positions" in cols and "tf" not in cols:
+        need.append("tf_bytes")
+    return bdf.select(*need).mapInPandas(posting_rows(cols),
+                                         posting_rows_schema(cols))

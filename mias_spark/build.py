@@ -8,32 +8,37 @@ Indexing.java:82,139-145):
 
   doc_store   ingest: dense doc_id by sorted sha256 doc_key; stored
               fields + content sha256 ingest invariant (input_hint)
-  tokens      Arrow tokenize, pre-aggregated per (doc, field, term) (B1)
+  tokens      Arrow tokenize, pre-aggregated per (doc, field, term)
+              (B1), staged ONCE as the transient _staging_build_tokens
+              segment its three consumers read; dropped when blocks
+              commit (a killed build resumes without re-tokenizing)
   doc_norms   per (doc, field) length counting every unified variant (B5)
   dictionary  dense term_id over (field, term) + document frequency (B2)
-  postings    exploded posting rows with inlined dl/df/idf/avgdl,
-              hash-bucketed by term_id, doc-sorted (B3) — also the
-              SQL-auditable surface for the DuckDB oracle gate
-  blocks      per-bucket driver loop: salt skewed terms (B4), local sort,
-              numpy pack into delta-gap varint blocks with block-max
-              scores; one checkpoint per bucket (B7 / north rule)
+  blocks      per-bucket-chunk loop over tokens ⋈ dictionary ⋈ field
+              stats (B3): salt skewed terms (B4), local sort, numpy pack
+              into delta-gap varint blocks with block-max scores and
+              positions; one checkpoint per bucket (B7 / north rule)
+
+The persisted index is doc_store, doc_norms, dictionary and blocks —
+the Lucene stored fields, norms, term dictionary and doc/pos files.
+Packed blocks are the only posting surface: posting rows are decoded
+from them on demand (blocks.decode_postings).
 
 Shuffle budget per build: 1 range-partition (doc ids) + 1 hash agg
-(dictionary) + 1 range-partition (term ids) + 2 joins (dictionary,
-norms — both shuffle-free when broadcastable, AQE decides) + 1
-repartition per bucket for packing. Everything else is mapInPandas.
+(dictionary) + 2 joins per bucket chunk (dictionary, field stats — both
+shuffle-free when broadcastable, AQE decides) + 1 repartition per chunk
+for packing. Everything else is mapInPandas.
 """
 
 from __future__ import annotations
 
-import math
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mias_spark import blocks as blk
-from mias_spark.catalog import Catalog
+from mias_spark.catalog import FORMAT_VERSION, Catalog
 from mias_spark.ids import assign_ids_hashed, assign_ids_hex
 from mias_spark.parallel import ensure_udf_parallelism
 from mias_spark.tokenize import tokenize_docs, with_meta
@@ -48,6 +53,10 @@ from mias_spec.constants import SALT_DF_THRESHOLD, SALT_DOC_RANGE
 DOC_SEG_SHIFT = 20
 
 
+#: the build's transient token segment (see module docstring)
+BUILD_TOKENS = "_staging_build_tokens"
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -56,15 +65,26 @@ def build_index(
     doc_limit: int | None = None,
     resume: bool = True,
     doc_seg_shift: int = DOC_SEG_SHIFT,
-    pack_positions: bool = True,
 ) -> Catalog:
     """Build a full index from a corpus(repo, path, commit, lang,
-    content) DataFrame. Idempotent and resumable when ``resume``."""
+    content) DataFrame. Idempotent and resumable when ``resume`` (a
+    resumed build keeps the bucket count it started with); a manifest
+    of an older on-disk format is never resumed — the build starts
+    over."""
     cat = Catalog(spark, index_dir)
-    if not resume:
+    m = cat.manifest()
+    if not resume or m["props"].get("format_version") != FORMAT_VERSION:
+        # start over: every table of a previous build goes (an older
+        # format's postings/tokens, another bucket count's partitions,
+        # its tombstones), or it would be read beside the new one
+        for t in set(m["tables"]) | {"tombstones"}:
+            cat.drop(t)
         m = cat.manifest()
         m["tables"], m["checkpoints"] = {}, {}
+        m["props"] = {"format_version": FORMAT_VERSION,
+                      "n_buckets": n_buckets}
         cat._save(m)
+    n_buckets = int(cat.props()["n_buckets"])
     t0 = time.time()
 
     # ------------------------------------------------------------ doc_store
@@ -100,27 +120,24 @@ def build_index(
         cat.metric("doc_store", rows=n, secs=time.time() - ts)
 
     # -------------------------------------------------------------- tokens
-    if not cat.table_done("tokens"):
+    if (not cat.table_done("blocks")
+            and not cat.table_done(BUILD_TOKENS)):
         ts = time.time()
         docs = cat.read("doc_store").select("doc_id", "content", "lang")
-        # Arrow-UDF stage: byte-aware 4x oversubscription (parallel.py).
-        # Partitioned by doc-range (tseg) so upsert/delete stats deltas
-        # prune their dead-doc scans to the segments actually touched.
-        from mias_spark.ops import _tseg
+        # Arrow-UDF stage: byte-aware 4x oversubscription (parallel.py)
         toks = tokenize_docs(ensure_udf_parallelism(docs))
-        cat.write(toks.withColumn("tseg", _tseg()), "tokens",
-                  partition_by=["tseg"])
-        cat.commit_table("tokens")
+        cat.write(toks, BUILD_TOKENS)
+        cat.commit_table(BUILD_TOKENS)
         cat.metric("tokens", secs=time.time() - ts)
 
     # ----------------------------------------------------------- doc_norms
     # dl (field length counting every unified variant, B5) is computed in
-    # the tokenize pass and carried ON each token row, so postings never
-    # join norms — this stage only materializes the narrow norms table
-    # for stats/ops parity
+    # the tokenize pass and carried ON each token row, so blocks never
+    # join norms — this stage materializes the narrow norms table and
+    # the per-field stats
     if not cat.table_done("doc_norms"):
         ts = time.time()
-        norms = (cat.read("tokens")
+        norms = (cat.read(BUILD_TOKENS)
                  .groupBy("doc_id", "field")
                  .agg(F.first("dl").alias("dl")))
         cat.write(norms, "doc_norms")
@@ -138,7 +155,7 @@ def build_index(
     # ---------------------------------------------------------- dictionary
     if not cat.table_done("dictionary"):
         ts = time.time()
-        dic = (cat.read("tokens")
+        dic = (cat.read(BUILD_TOKENS)
                .groupBy("field", "term")
                .agg(F.count("*").alias("df")))  # one token row per doc
         dic, n = assign_ids_hashed(dic, ["field", "term"], "term_id")
@@ -151,42 +168,11 @@ def build_index(
         cat.commit_table("dictionary", rows=n)
         cat.metric("dictionary", rows=n, secs=time.time() - ts)
 
-    # ------------------------------------------------------------ postings
-    if not cat.table_done("postings"):
-        ts = time.time()
-        toks = cat.read("tokens")
-        dic = cat.read("dictionary")
-        fs = cat.props()["field_stats"]
-        stats_df = spark.createDataFrame(
-            [(f, int(v["n_docs"]), float(v["avgdl"])) for f, v in fs.items()],
-            "field string, n_docs long, avgdl double")
-        posts = (
-            toks.join(dic, ["field", "term"])
-            .join(F.broadcast(stats_df), "field")
-            .withColumn("idf", F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)))
-            .select(
-                "term_id", "field", "doc_id", "tf", "wsum", "dl", "df",
-                "idf", "avgdl", "positions",
-                F.pmod("term_id", F.lit(n_buckets)).cast("int").alias("bucket"))
-        )
-        # range partition: full parallelism AND each task covers a
-        # contiguous (bucket, term) slice, so the partitionBy writer
-        # emits ~1 file per task instead of n_buckets small files each
-        n_out = max(n_buckets, 2 * spark.sparkContext.defaultParallelism)
-        cat.write(posts.repartitionByRange(n_out, "bucket", "term_id",
-                                           "doc_id")
-                  .sortWithinPartitions("term_id", "doc_id"),
-                  "postings", partition_by=["bucket"])
-        cat.commit_table("postings")
-        cat.set_props(n_buckets=n_buckets)
-        cat.metric("postings", secs=time.time() - ts)
-
     # -------------------------------------------------------------- blocks
-    build_blocks(spark, cat, n_buckets, pack_positions=pack_positions)
     if not cat.table_done("blocks"):
+        build_blocks(spark, cat, n_buckets, cat.read(BUILD_TOKENS))
         cat.commit_table("blocks")
+    cat.drop(BUILD_TOKENS)
 
     # -------------------------------------------------------------- metrics
     n_docs = cat.manifest()["tables"]["doc_store"]["rows"]
@@ -218,20 +204,36 @@ def _dbucket():
                   F.lit(N_DICT_BUCKETS)).cast("int")
 
 
+def packed_blocks(posts: DataFrame, n_buckets: int,
+                  width: int) -> DataFrame:
+    """Posting rows (the ops._posting_rows shape) -> packed block rows
+    with their bucket column, over ``width`` pack tasks."""
+    return (_salted(posts)
+            .repartition(width, "term_id", "salt")
+            .sortWithinPartitions("term_id", "salt", "doc_id")
+            .mapInPandas(blk.pack_sorted_partition, blk.BLOCKS_SCHEMA)
+            .withColumn("bucket",
+                        F.pmod("term_id", F.lit(n_buckets)).cast("int")))
+
+
 def build_blocks(spark: SparkSession, cat: Catalog, n_buckets: int,
-                 chunk: int | None = None,
-                 pack_positions: bool = True) -> None:
-    """Pack postings into compressed blocks, a chunk of term buckets per
+                 toks: DataFrame, chunk: int | None = None) -> None:
+    """Pack the token rows ``toks`` (joined to the dictionary and the
+    field stats) into compressed blocks, a chunk of term buckets per
     Spark job. Checkpoints stay PER BUCKET (the north-rule per-partition
     resume unit — a killed build redoes only unfinished buckets), but
     several buckets ride one job + one dynamic-partition-overwrite commit
     so driver job-scheduling latency doesn't serialize the stage."""
-    posts = cat.read("postings")
+    from mias_spark.ops import _posting_rows
+    ts0 = time.time()
+    posts = _posting_rows(spark, cat, toks, n_buckets)
     chunk = chunk or max(1, n_buckets // 2)
     n_chunks = -(-n_buckets // chunk)
     from mias_spark.parallel import BYTES_PER_TASK, plan_size_bytes
     par = spark.sparkContext.defaultParallelism
-    psize = plan_size_bytes(posts) or 0
+    # sized from the token scan: a join plan's size estimate is the
+    # product of its sides
+    psize = plan_size_bytes(toks) or 0
     pack_width = int(max(par, min(
         4 * par, psize // n_chunks // BYTES_PER_TASK + 1)))
     # dynamic partition overwrite is scoped inside
@@ -242,22 +244,13 @@ def build_blocks(spark: SparkSession, cat: Catalog, n_buckets: int,
         if not todo:
             continue
         ts = time.time()
-        sub = _salted(posts.where(F.col("bucket").isin(todo)))
-        pack_fn = (blk.pack_sorted_partition if pack_positions
-                   else blk.pack_sorted_partition_nopos)
-        schema = (blk.BLOCKS_SCHEMA if pack_positions
-                  else blk.BLOCKS_SCHEMA_NOPOS)
-        packed = (
-            sub.repartition(pack_width, "term_id", "salt")
-            .sortWithinPartitions("term_id", "salt", "doc_id")
-            .mapInPandas(pack_fn, schema)
-            .withColumn("bucket",
-                        F.pmod("term_id", F.lit(n_buckets)).cast("int"))
-        )
+        packed = packed_blocks(posts.where(F.col("bucket").isin(todo)),
+                               n_buckets, pack_width)
         cat.overwrite_partitions(packed, "blocks", ["bucket"])
         for b in todo:
             cat.checkpoint("blocks", f"bucket={b}", rows=-1,
                            t_start=ts, t_end=time.time())
+    cat.metric("blocks", secs=time.time() - ts0)
 
 
 def index_stats(cat: Catalog) -> dict:
@@ -276,9 +269,9 @@ def index_stats(cat: Catalog) -> dict:
         "total_input_bytes": agg["total_bytes"],
         "n_formulae": agg["n_formulae"],
         "n_terms": m["tables"].get("dictionary", {}).get("rows"),
-        # postings rows are not counted during the build (saves a job);
-        # stats computes the footer-only count on demand
-        "n_postings": (m["tables"].get("postings", {}).get("rows")
-                       or cat.read("postings").count()),
+        # packed postings (block n_docs summed — tombstoned docs count
+        # until compaction drops them)
+        "n_postings": int(cat.read("blocks")
+                          .agg(F.sum("n_docs")).collect()[0][0] or 0),
         "snapshot": m["snapshot"],
     }

@@ -27,6 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "manifest.json"
 
+#: on-disk index format that build_index stamps in the manifest props
+#: and every reader/writer requires. 2: packed blocks are the only
+#: posting surface (no persisted postings or tokens table), so every
+#: content/title block must carry pos_bytes — an older index may lack
+#: them and would silently lose its phrase matches.
+FORMAT_VERSION = 2
+
 
 @dataclass
 class Catalog:
@@ -370,6 +377,17 @@ class Catalog:
 
     def props(self) -> dict[str, Any]:
         return self.manifest().get("props", {})
+
+    def require_format(self) -> None:
+        """Refuse an index not written in FORMAT_VERSION (one clear
+        error instead of wrong results from a surface this code no
+        longer reads)."""
+        v = self.props().get("format_version")
+        if v != FORMAT_VERSION:
+            raise ValueError(
+                f"{self.root}: index format {v if v is not None else 1} "
+                f"is not the current format {FORMAT_VERSION}; rebuild "
+                "the index (build_index)")
 
     def set_props(self, **kv) -> None:
         m = self.manifest()

@@ -14,7 +14,7 @@ reference Settings.java:96-175, README.md:39-58).
 | FORMULA_DOCUMENTS | one document per formula             | formula_docs    |
 
 Extra engine knobs (no reference analog): n_buckets (term_id hash
-buckets of the postings/blocks layout).
+buckets of the blocks layout).
 """
 
 from __future__ import annotations

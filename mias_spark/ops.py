@@ -6,13 +6,18 @@ Segment architecture (the Lucene delete-and-add model, Indexing.java:145,
 re-expressed for append-only tables):
 
   upsert   = tombstone replaced doc_ids + APPEND new rows to doc_store /
-             tokens / postings / blocks (delta segments; cost scales
-             with the DELTA, never the index) + refresh the narrow
-             global-stats tables (norms, field stats, dictionary df)
+             doc_norms / blocks (delta segments; cost scales with the
+             DELTA, never the index) + refresh the narrow global-stats
+             tables (field stats, dictionary df)
   delete   = tombstone + stats refresh ONLY — no posting data moves
              (Lucene liveDocs-bitset semantics)
   optimize = compaction / force-merge: purge tombstoned rows, clear
-             tombstones, full sorted rebuild of postings + blocks
+             tombstones, full sorted rebuild of the blocks
+
+No token or posting-row table is persisted: the delta's tokens are
+staged for the length of one call, and a doomed doc's stats
+contribution is recomputed by re-tokenizing its doc_store content
+(O(delta) work) — the same analyzer run that produced it.
 
 Correctness with stale segments: query-time scoring takes idf / avgdl /
 n_docs from the CLAUSE table (always fresh), dl rides on each posting
@@ -35,21 +40,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mias_spark import blocks as blk
+from mias_spark.build import _dbucket, build_blocks, packed_blocks
 from mias_spark.catalog import Catalog
 from mias_spark.ids import assign_ids_hashed, assign_ids_hex
+from mias_spark.parallel import ensure_udf_parallelism
 from mias_spark.tokenize import tokenize_docs, with_meta
 
 
 # ---------------------------------------------------------------- live views
-
-def live_tokens(cat: Catalog) -> DataFrame:
-    # mergeSchema: pre-dl base segments + post-dl deltas must coexist
-    # (the coalesce(max(dl), sum(tf)) fallbacks depend on seeing dl
-    # as a nullable column, not on which footer Spark sampled)
-    toks = cat.read("tokens", merge_schema=True)
-    tomb = cat.tombstones()
-    return toks if tomb is None else toks.join(tomb, "doc_id", "leftanti")
-
 
 def live_norms(cat: Catalog) -> DataFrame:
     """doc_norms minus tombstoned docs — doc_norms itself is
@@ -66,28 +65,6 @@ def live_store(cat: Catalog) -> DataFrame:
     return store if tomb is None else store.join(tomb, "doc_id", "leftanti")
 
 
-def _compat_blocks(cat: Catalog, packed: DataFrame) -> DataFrame:
-    """Keep an existing blocks table schema-consistent: appending NEW
-    columns (pos_bytes — round 4; idf0/avgdl0 — round 2) beside older
-    files would make reads nondeterministic (the hot path reads
-    without mergeSchema, so the inferred schema depends on which
-    footer Spark samples; a sampled-in pos_bytes surfaces as None on
-    old rows and crashes the phrase decode, a sampled-out idf0 hides
-    the delta segments' rescale stats). Dropping the extras keeps the
-    table on its legacy semantics — the engine already handles each
-    absent column; a full `optimize` rebuilds and upgrades the
-    schema."""
-    try:
-        if cat.has_table("blocks"):
-            existing = set(cat.read("blocks").columns)
-            extra = [c for c in packed.columns if c not in existing]
-            if extra:
-                return packed.drop(*extra)
-    except Exception:
-        pass
-    return packed
-
-
 # ---------------------------------------------- incremental stats (delta)
 #
 # Upsert/delete cost must scale with the DELTA, never the index
@@ -96,15 +73,6 @@ def _compat_blocks(cat: Catalog, packed: DataFrame) -> DataFrame:
 # append-only with tombstone filtering at read, and per-field stats
 # (n_docs, sum_dl -> avgdl) update arithmetically in the manifest.
 # `optimize` folds everything back into a clean base (rebuild_stats).
-
-TSEG_SHIFT = 20   # tokens partitioned by doc_id >> TSEG_SHIFT: dead-doc
-                  # partials prune the scan to the doc-range partitions
-                  # actually holding the replaced/deleted ids
-
-
-def _tseg():
-    return F.shiftright("doc_id", TSEG_SHIFT).alias("tseg")
-
 
 def _field_stats(cat: Catalog) -> dict:
     fs = {k: dict(v) for k, v in cat.props()["field_stats"].items()}
@@ -137,28 +105,23 @@ def _norm_stats(norms: DataFrame) -> dict:
 def _dead_partials(spark: SparkSession, cat: Catalog, doomed: DataFrame
                    ) -> tuple[DataFrame, dict]:
     """(negative dictionary-df rows, per-field minus stats) for a set
-    of doomed doc_ids. The tokens scan is pruned to the doc-range
-    (tseg) partitions containing the doomed ids; the number of segments
-    bounds the driver collect, not the number of docs."""
-    toks = cat.read("tokens", merge_schema=True)
-    if "tseg" in toks.columns:
-        segs = [int(r[0]) for r in
-                doomed.select(F.shiftright("doc_id", TSEG_SHIFT)
-                              .alias("s")).distinct().collect()]
-        toks = toks.where(F.col("tseg").isin(segs))
-    dead = toks.join(doomed.select("doc_id"), "doc_id", "leftsemi")
-    cols = ["doc_id", "field", "term", "tf"] \
-        + (["dl"] if "dl" in toks.columns else [])
-    # stage the dead rows ONCE: several downstream actions (dictionary
-    # delta appends, new-term detection, norm stats) would otherwise
-    # each re-run the pruned token scan
-    cat.write(dead.select(*cols), "_staging_dead_toks")
+    of doomed doc_ids, from re-tokenizing their doc_store content. The
+    store read is pruned to the doc-range (dseg) partitions holding the
+    doomed ids; the number of segments bounds the driver collect, not
+    the number of docs."""
+    shift = int(cat.props().get("doc_seg_shift", 20))
+    segs = [int(r[0]) for r in
+            doomed.select(F.shiftright("doc_id", shift).alias("s"))
+            .distinct().collect()]
+    docs = (cat.read("doc_store").where(F.col("dseg").isin(segs))
+            .join(doomed.select("doc_id"), "doc_id", "leftsemi"))
+    # stage the dead rows ONCE: the dictionary delta append and the
+    # norm stats would otherwise each re-run the tokenize
+    cat.write(tokenize_docs(docs).select("doc_id", "field", "term", "dl"),
+              "_staging_dead_toks")
     staged = cat.read("_staging_dead_toks")
     ddf = staged.groupBy("field", "term").agg((-F.count("*")).alias("df"))
-    # dl fallback for pre-dl token segments (ADVICE r1): sum(tf) == dl
-    dl_expr = (F.coalesce(F.max("dl"), F.sum("tf"))
-               if "dl" in cols else F.sum("tf"))
-    dnorm = staged.groupBy("doc_id", "field").agg(dl_expr.alias("dl"))
+    dnorm = staged.groupBy("doc_id", "field").agg(F.first("dl").alias("dl"))
     return ddf, _norm_stats(dnorm)
 
 
@@ -221,7 +184,7 @@ def maybe_fold_dictionary(cat: Catalog,
                           staleness_s: float | None = None) -> bool:
     """Merge-policy for the dictionary alone: fold base + deltas into
     one clean base (term_ids preserved, signed df summed, df<=0 rows
-    dropped) WITHOUT touching postings/blocks, when EITHER
+    dropped) WITHOUT touching the blocks, when EITHER
     ``max_segments`` delta appends accumulated OR any delta is older
     than ``staleness_s``. Bounds the per-query merge fan-in under
     sustained upserts; `optimize` still does the full fold as part of
@@ -252,15 +215,23 @@ def maybe_fold_dictionary(cat: Catalog,
 
 # ------------------------------------------------------------ stats refresh
 
-def rebuild_stats(spark: SparkSession, cat: Catalog) -> None:
-    """FULL rebuild of the narrow statistics surfaces from live tokens
-    — the compaction path (optimize); incremental upsert/delete use the
-    delta functions above instead. term_ids are preserved; the
-    dictionary's delta segments fold into a clean base."""
-    toks = live_tokens(cat)
+def _stage_live_tokens(cat: Catalog) -> DataFrame:
+    """Tokens of every live doc, re-tokenized from doc_store and staged
+    once for the full rebuilds (stats + blocks both read them)."""
+    docs = live_store(cat).select("doc_id", "content", "lang")
+    cat.write(tokenize_docs(ensure_udf_parallelism(docs)),
+              "_staging_live_toks")
+    return cat.read("_staging_live_toks")
 
-    norms = toks.groupBy("doc_id", "field").agg(
-        F.coalesce(F.max("dl"), F.sum("tf")).alias("dl"))
+
+def rebuild_stats(spark: SparkSession, cat: Catalog,
+                  toks: DataFrame) -> None:
+    """FULL rebuild of the narrow statistics surfaces from the live
+    tokens ``toks`` — the compaction path (optimize); incremental
+    upsert/delete use the delta functions above instead. term_ids are
+    preserved; the dictionary's delta segments fold into a clean
+    base."""
+    norms = toks.groupBy("doc_id", "field").agg(F.first("dl").alias("dl"))
     cat.overwrite(norms, "doc_norms")
     stats = (cat.read("doc_norms").groupBy("field")
              .agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"),
@@ -288,7 +259,6 @@ def rebuild_stats(spark: SparkSession, cat: Catalog) -> None:
         next_id = int(next_id) + int(n_new)
     else:
         dic = kept
-    from mias_spark.build import _dbucket
     cat.overwrite(dic.withColumn("dbucket", _dbucket()), "dictionary",
                   ["dbucket"])
     cat.set_props(next_term_id=int(next_id), dict_segments=0)
@@ -304,8 +274,8 @@ _DICT_PRUNE_MIN_TERMS = 100_000
 def _posting_rows(spark: SparkSession, cat: Catalog, toks: DataFrame,
                   n_buckets: int,
                   prune_dictionary: bool = False) -> DataFrame:
-    """Token rows -> bucketed posting rows with inlined stats (the same
-    shape build_index writes).
+    """Token rows -> bucketed posting rows with inlined stats: the
+    frame every block pack consumes (build, upsert, optimize).
 
     ``prune_dictionary`` (delta callers): the merged-dictionary read is
     restricted to the token frame's own terms — dbucket partition
@@ -314,7 +284,9 @@ def _posting_rows(spark: SparkSession, cat: Catalog, toks: DataFrame,
     sum is the full sum). A micro-batch upsert then pays O(delta
     terms) for its dictionary join, not an index-sized scan+agg —
     at 10^9 dictionary terms that difference IS the per-batch cost.
-    Full-index callers (rebuild) keep the plain read."""
+    Full-index callers (build, rebuild) keep the plain read, which
+    skips the segment-merge agg entirely while the dictionary is one
+    clean base (no delta segments since the last fold)."""
     fs = cat.props()["field_stats"]
     stats_df = spark.createDataFrame(
         [(f, int(v["n_docs"]), float(v["avgdl"])) for f, v in fs.items()],
@@ -327,7 +299,6 @@ def _posting_rows(spark: SparkSession, cat: Catalog, toks: DataFrame,
     small = (int(cat.props().get("next_term_id", 0))
              < _DICT_PRUNE_MIN_TERMS)
     if prune_dictionary and not small and "dbucket" in dic_rows.columns:
-        from mias_spark.build import _dbucket
         dterms = (toks.select("field", "term").distinct()
                   .withColumn("dbucket", _dbucket()))
         bks = [int(r[0]) for r in
@@ -337,6 +308,8 @@ def _posting_rows(spark: SparkSession, cat: Catalog, toks: DataFrame,
                         ["field", "term"], "leftsemi")
                   .groupBy("field", "term", "term_id")
                   .agg(F.sum("df").alias("df")))
+    elif not int(cat.props().get("dict_segments", 0)):
+        merged = dic_rows.drop("dbucket")     # unique (field, term) rows
     else:
         merged = cat.read_dictionary().drop("dbucket")
     return (
@@ -351,25 +324,18 @@ def _posting_rows(spark: SparkSession, cat: Catalog, toks: DataFrame,
     )
 
 
-def rebuild_postings_blocks(spark: SparkSession, cat: Catalog) -> None:
-    """Full sorted rebuild of postings + blocks from live tokens (the
-    compaction path; incremental paths append delta segments instead)."""
+def rebuild_postings_blocks(spark: SparkSession, cat: Catalog,
+                            toks: DataFrame) -> None:
+    """Full sorted rebuild of the blocks from the live tokens ``toks``
+    (the compaction path; incremental paths append delta segments
+    instead)."""
     n_buckets = cat.props()["n_buckets"]
-    posts = _posting_rows(spark, cat, live_tokens(cat), n_buckets)
-    n_out = max(n_buckets, 2 * spark.sparkContext.defaultParallelism)
-    cat.overwrite(
-        posts.repartitionByRange(n_out, "bucket", "term_id", "doc_id")
-             .sortWithinPartitions("term_id", "doc_id"),
-        "postings", ["bucket"])
-    cat.commit_table("postings", rows=cat.read("postings").count())
-
-    from mias_spark.build import build_blocks
     m = cat.manifest()
     m["checkpoints"] = {k: v for k, v in m["checkpoints"].items()
                         if not k.startswith("blocks/")}
     cat._save(m)
     cat.drop("blocks")
-    build_blocks(spark, cat, n_buckets)
+    build_blocks(spark, cat, n_buckets, toks)
     cat.commit_table("blocks")
     cat.flush_meta()
 
@@ -379,12 +345,14 @@ def rebuild_postings_blocks(spark: SparkSession, cat: Catalog) -> None:
 def upsert(spark: SparkSession, index_dir: str, new_corpus: DataFrame) -> dict:
     """MERGE INTO semantics on doc_key: replace matching docs, add the
     rest (B6). Pure delta work: replaced docs are TOMBSTONED (their
-    stats contributions subtracted via a doc-range-pruned partial
-    scan), new docs are tokenized and APPENDED as fresh segments to
-    doc_store, tokens, doc_norms, dictionary (signed-df delta rows),
-    postings and blocks. NOTHING is re-aggregated over the whole index
+    stats contributions subtracted by re-tokenizing their doc-range-
+    pruned doc_store rows), new docs are tokenized and APPENDED as
+    fresh segments to doc_store, doc_norms, dictionary (signed-df delta
+    rows) and blocks. NOTHING is re-aggregated over the whole index
     — upsert wall time scales with the delta, not the index."""
+    ts = time.time()
     cat = Catalog(spark, index_dir)
+    cat.require_format()
     keyed = new_corpus.withColumn(
         "doc_key", F.sha2(F.concat_ws("|", "repo", "path", "commit"), 256))
     store = cat.read("doc_store")
@@ -428,17 +396,11 @@ def upsert(spark: SparkSession, index_dir: str, new_corpus: DataFrame) -> dict:
     cat.set_props(next_doc_id=int(next_doc) + n_assigned)
     cat.commit_table("doc_store")
 
+    # the delta's tokens feed norms, dictionary and blocks: staged
+    # once for this call, never persisted
     new_toks = tokenize_docs(delta_store.select("doc_id", "content", "lang"))
     cat.write(new_toks, "_staging_delta_toks")
     delta_toks = cat.read("_staging_delta_toks")
-    if "tseg" in cat.read("tokens").columns:
-        cat.append(delta_toks.withColumn("tseg", _tseg()), "tokens",
-                   ["tseg"])
-    else:
-        # pre-tseg index: appending partition dirs beside flat files
-        # would break partition discovery — stay unpartitioned
-        cat.append(delta_toks, "tokens")
-    cat.commit_table("tokens")
 
     # ---- incremental narrow-stats maintenance (delta-only work)
     delta_norms = delta_toks.groupBy("doc_id", "field").agg(
@@ -452,44 +414,26 @@ def upsert(spark: SparkSession, index_dir: str, new_corpus: DataFrame) -> dict:
         delta_df = delta_df.unionByName(dead_ddf)
     _append_dictionary_delta(spark, cat, delta_df)
 
-    # delta posting + block segments (new docs only — the appended block
-    # segments carry CURRENT idf0; old segments rescale at query time)
+    # delta block segments packed straight from the delta posting rows
+    # (new docs only — the appended segments carry CURRENT idf0; old
+    # segments rescale at query time)
     n_buckets = cat.props()["n_buckets"]
-    # stage the delta posting rows ONCE: the lineage behind them (delta
-    # tokens joined to the MERGED dictionary view — an index-sized
-    # read, not a delta-sized one) would otherwise execute twice, once
-    # for the postings append and again for the block pack
-    cat.write(_posting_rows(spark, cat, delta_toks, n_buckets,
-                            prune_dictionary=True),
-              "_staging_delta_posts")
-    posts = cat.read("_staging_delta_posts")
+    posts = _posting_rows(spark, cat, delta_toks, n_buckets,
+                          prune_dictionary=True)
     n_out = max(n_buckets, spark.sparkContext.defaultParallelism)
-    sorted_posts = (
-        posts.repartitionByRange(n_out, "bucket", "term_id", "doc_id")
-        .sortWithinPartitions("term_id", "doc_id"))
-    cat.append(sorted_posts, "postings", ["bucket"])
-    cat.commit_table("postings")
-    from mias_spark import blocks as blk
-    from mias_spark.build import _salted
-    packed = (_salted(posts)
-              .repartition(n_out, "term_id", "salt")
-              .sortWithinPartitions("term_id", "salt", "doc_id")
-              .mapInPandas(blk.pack_sorted_partition, blk.BLOCKS_SCHEMA)
-              .withColumn("bucket",
-                          F.pmod("term_id", F.lit(n_buckets)).cast("int")))
-    cat.append(_compat_blocks(cat, packed), "blocks", ["bucket"])
+    cat.append(packed_blocks(posts, n_buckets, n_out), "blocks", ["bucket"])
     cat.commit_table("blocks")
     cat.flush_meta()
 
     # n_assigned counts the rows that actually got ids — re-counting
     # new_corpus would re-execute the whole input source (zip
     # expansion, XML parse) for a metric
-    cat.metric("upsert", added=n_assigned, replaced=n_replaced)
+    cat.metric("upsert", added=n_assigned, replaced=n_replaced,
+               secs=time.time() - ts)
     # reclaim the staging segments (delta corpus content included —
     # leaving them doubles the delta's footprint until the next op)
     for t in ("_staging_replaced", "_staging_delta_store",
-              "_staging_delta_toks", "_staging_dead_toks",
-              "_staging_delta_posts"):
+              "_staging_delta_toks", "_staging_dead_toks"):
         cat.drop(t)
     maybe_compact(spark, index_dir)
     return {"added": n_assigned, "replaced": n_replaced}
@@ -506,7 +450,9 @@ def delete_by_path(spark: SparkSession, index_dir: str,
     ``path_prefix`` is a RAW string prefix (the reference's recursive
     delete semantics): deleting a directory should pass a trailing
     slash ('src/dir/'), or 'src/dir' will also match 'src/dir2/...'."""
+    ts = time.time()
     cat = Catalog(spark, index_dir)
+    cat.require_format()
     cat.write(live_store(cat).where(F.col("path").startswith(path_prefix))
               .select("doc_id"), "_staging_doomed")
     doomed = cat.read("_staging_doomed")
@@ -518,7 +464,8 @@ def delete_by_path(spark: SparkSession, index_dir: str,
     _append_dictionary_delta(spark, cat, ddf)
     _apply_stats_delta(cat, {}, minus)
     cat.flush_meta()
-    cat.metric("delete", removed=n, path_prefix=path_prefix)
+    cat.metric("delete", removed=n, path_prefix=path_prefix,
+               secs=time.time() - ts)
     for t in ("_staging_doomed", "_staging_dead_toks"):
         cat.drop(t)
     maybe_compact(spark, index_dir)
@@ -567,22 +514,24 @@ def compact_step(spark: SparkSession, index_dir: str,
     1. on epoch start, snapshots the current tombstones (docs dying
        mid-epoch stay tombstoned until the NEXT epoch — per-bucket
        cleaning must use one consistent dead set),
-    2. cleans + repacks up to ``max_buckets`` term buckets: snapshot
-       docs' posting rows dropped, idf/df/avgdl refreshed from the
-       merged dictionary + current field stats (merged segments carry
+    2. cleans + repacks up to ``max_buckets`` term buckets: the
+       slice's blocks are decoded to posting rows, snapshot docs'
+       rows dropped, field/df/idf/avgdl refreshed from the merged
+       dictionary + current field stats (merged segments carry
        different pack-time snapshots, so a repacked block needs ONE
        consistent idf0), one globally doc-sorted segment per bucket
-       written via dynamic partition overwrite,
-    3. when the last bucket finishes, purges doc_store / tokens /
-       doc_norms of the snapshot docs, retires the snapshot tombstones
-       (clearing the table — and re-arming the block-max pruning floor
-       — if nothing newer died), and folds the dictionary deltas.
+       packed and written via dynamic partition overwrite,
+    3. when the last bucket finishes, purges doc_store / doc_norms of
+       the snapshot docs, retires the snapshot tombstones (clearing the
+       table — and re-arming the block-max pruning floor — if nothing
+       newer died), and folds the dictionary deltas.
 
     No single call rewrites more than ~1/COMPACT_BUCKET_FRACTION of the
-    postings; repeated triggers converge to one clean segment. Stats
+    blocks; repeated triggers converge to one clean segment. Stats
     stay exact throughout — the incremental delta maintenance already
     updated them at delete time."""
     cat = Catalog(spark, index_dir)
+    cat.require_format()
     props = cat.props()
     n_buckets = props["n_buckets"]
     pending = props.get("compact_pending")
@@ -603,53 +552,38 @@ def compact_step(spark: SparkSession, index_dir: str,
     stats_df = spark.createDataFrame(
         [(f, int(v["n_docs"]), float(v["avgdl"])) for f, v in fs.items()],
         "field string, n_docs long, avgdl double")
-    dic = (cat.read_dictionary()
-           .groupBy("term_id").agg(F.sum("df").alias("df")))
-    posts = (cat.read("postings")
-             .where(F.col("bucket").isin([int(b) for b in todo]))
+    dic = cat.read_dictionary().select("term_id", "field", "df")
+    slice_ = [int(b) for b in todo]
+    posts = (blk.decoded_postings(
+                 cat.read("blocks").where(F.col("bucket").isin(slice_)))
              .join(snap, "doc_id", "leftanti")
-             .drop("df", "idf", "avgdl")
              .join(dic, "term_id")
              .join(F.broadcast(stats_df), "field")
              .withColumn("idf", F.log(
                  F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5)
                  / (F.col("df") + 0.5)))
              .select("term_id", "field", "doc_id", "tf", "wsum", "dl",
-                     "df", "idf", "avgdl", "positions", "bucket"))
+                     "df", "idf", "avgdl", "positions",
+                     F.pmod("term_id", F.lit(n_buckets)).cast("int")
+                     .alias("bucket")))
     n_out = max(len(todo), spark.sparkContext.defaultParallelism)
     # stage the cleaned slice first: the dynamic partition overwrite
     # cannot read from the path it is rewriting (the full overwrite()
     # has the same stage-then-swap dance built in)
     cat.write(posts, "_staging_compact_posts")
     staged = cat.read("_staging_compact_posts")
-    cat.overwrite_partitions(
-        staged.repartitionByRange(n_out, "bucket", "term_id", "doc_id")
-              .sortWithinPartitions("term_id", "doc_id"),
-        "postings", ["bucket"])
+    cat.overwrite_partitions(packed_blocks(staged, n_buckets, n_out),
+                             "blocks", ["bucket"])
     # a bucket whose every posting belonged to snapshot-dead docs has
     # NO rows in the staged frame, so the dynamic overwrite above left
     # its stale files untouched — once the epoch retires the
     # tombstones those docs would rise from the dead. Drop such
-    # partitions explicitly (footer-only job: one distinct over the
-    # staged bucket column).
+    # partitions explicitly (one distinct over the staged bucket
+    # column).
     surv = {int(r["bucket"])
             for r in staged.select("bucket").distinct().collect()}
-    gone = [int(b) for b in todo if int(b) not in surv]
-    cat.drop_partitions("postings", "bucket", gone)
-    cat.commit_table("postings")
-    from mias_spark import blocks as blk
-    from mias_spark.build import _salted
-    clean = (cat.read("postings")
-             .where(F.col("bucket").isin([int(b) for b in todo])))
-    packed = (_salted(clean)
-              .repartition(n_out, "term_id", "salt")
-              .sortWithinPartitions("term_id", "salt", "doc_id")
-              .mapInPandas(blk.pack_sorted_partition, blk.BLOCKS_SCHEMA)
-              .withColumn("bucket",
-                          F.pmod("term_id", F.lit(n_buckets)).cast("int")))
-    cat.overwrite_partitions(_compat_blocks(cat, packed), "blocks",
-                             ["bucket"])
-    cat.drop_partitions("blocks", "bucket", gone)
+    cat.drop_partitions("blocks", "bucket",
+                        [b for b in slice_ if b not in surv])
     cat.commit_table("blocks")
     cat.drop("_staging_compact_posts")   # reclaim the staged slice
 
@@ -660,11 +594,6 @@ def compact_step(spark: SparkSession, index_dir: str,
         cat.overwrite(live, "doc_store",
                       ["dseg"] if "dseg" in live.columns else None)
         cat.commit_table("doc_store")
-        toks = (cat.read("tokens", merge_schema=True)
-                .join(snap, "doc_id", "leftanti"))
-        cat.overwrite(toks.withColumn("tseg", _tseg()), "tokens",
-                      ["tseg"])
-        cat.commit_table("tokens")
         cat.overwrite(cat.read("doc_norms")
                       .join(snap, "doc_id", "leftanti"), "doc_norms")
         cat.commit_table("doc_norms")
@@ -710,10 +639,12 @@ def compact_until_clean(spark: SparkSession, index_dir: str,
 
 def optimize(spark: SparkSession, index_dir: str) -> dict:
     """S8 optimize / force-merge analog (Indexing.java:167-179; Iceberg
-    rewrite_data_files analog): purge tombstoned rows from doc_store and
-    tokens, clear the tombstones, and rebuild postings + blocks into one
-    globally doc-sorted segment per bucket."""
+    rewrite_data_files analog): purge tombstoned rows from doc_store,
+    clear the tombstones, re-tokenize the live store once, and rebuild
+    the stats and the blocks into one globally doc-sorted segment per
+    bucket."""
     cat = Catalog(spark, index_dir)
+    cat.require_format()
     tomb = cat.tombstones()
     n_dead = tomb.count() if tomb is not None else 0
     if n_dead:
@@ -721,12 +652,11 @@ def optimize(spark: SparkSession, index_dir: str) -> dict:
         cat.overwrite(live, "doc_store",
                       ["dseg"] if "dseg" in live.columns else None)
         cat.commit_table("doc_store")
-        cat.overwrite(live_tokens(cat).withColumn("tseg", _tseg()),
-                      "tokens", ["tseg"])
-        cat.commit_table("tokens")
         cat.clear_tombstones()
-    rebuild_stats(spark, cat)   # folds dictionary deltas into the base
-    rebuild_postings_blocks(spark, cat)
+    toks = _stage_live_tokens(cat)
+    rebuild_stats(spark, cat, toks)   # folds dictionary deltas into the base
+    rebuild_postings_blocks(spark, cat, toks)
+    cat.drop("_staging_live_toks")
     # a full optimize supersedes any in-flight bounded epoch
     if cat.props().get("compact_pending"):
         cat.set_props(compact_pending=[])

@@ -2,8 +2,8 @@
 
 Driver-side query compile (pure Python, the SAME mias_spec tokenizer as
 index time) -> tiny broadcast clause table -> bucket- and term-pruned
-scan of postings (or packed blocks) -> BM25 scoring in native Catalyst
-expressions (or a vectorized numpy block kernel) -> MUST-group
+scan of the packed posting blocks -> BM25 scoring by a vectorized numpy
+block kernel (or native Catalyst expressions) -> MUST-group
 conjunction -> TakeOrderedAndProject top-k -> doc_store join for display
 fields.
 
@@ -17,9 +17,10 @@ Two physical plans, rank-identical by construction:
                   one shard runs driver-side in ONE job, tombstones
                   included (a small dead set is read once per snapshot
                   and masked in the kernel, the Lucene liveDocs filter).
-  mode="df"     : exploded postings + Catalyst; whole-stage codegen,
-                  zero Python in the hot path. The reference plan behind
-                  the ``ir_engine_topk`` DuckDB oracle row.
+  mode="df"     : posting rows decoded from the same blocks
+                  (blocks.decoded_postings), scored, conjoined and
+                  ranked in Catalyst. The reference plan behind the
+                  ``ir_engine_topk`` DuckDB oracle row.
 """
 
 from __future__ import annotations
@@ -109,8 +110,8 @@ def _phrase_prepass(pdf: pd.DataFrame, phr: dict, dead_l,
     banned TERM blocks that ride the scoring kernel's own shard —
     positions, adjacency, MUST_NOT exclusion and the per-group phrase
     scores all happen inside the one applyInPandas, replacing the two
-    extra Python stages (_positions_from_blocks + the allowlist agg)
-    the round-4 plan paid per phrase query. Returns (dead_all,
+    extra Python stages (a positions decode + the allowlist agg) the
+    round-4 plan paid per phrase query. Returns (dead_all,
     allow_docs, allow_ps): dead_all unions tombstones, banned-term
     docs and MUST_NOT-phrase matches (sorted unique); allow_* carry
     the docs matching EVERY MUST phrase group with their summed
@@ -259,16 +260,19 @@ def _phrase_prepass(pdf: pd.DataFrame, phr: dict, dead_l,
     return dead_all, allow_docs, allow_ps
 
 
-def kernel_core(pdf: pd.DataFrame, params: tuple, dead_l,
-                allow_docs=None, allow_ps=None) -> pd.DataFrame:
+def kernel_core(pdf: pd.DataFrame, params: tuple, dead_l
+                ) -> pd.DataFrame:
     """The per-shard block kernel (module-level so unit tests can
     drive it directly on synthetic block frames; see
-    Engine._topk_blocks for the plan that feeds it). ``params`` may be
-    the 9-tuple (no fused phrases) or a 10-tuple whose last element is
-    the fused phrase/ban plan consumed by ``_phrase_prepass``."""
-    (cmap_l, ngroups, n_top, lo_l, span_l, ns, gm, eg_l,
-     h_allow) = params[:9]
-    phr = params[9] if len(params) > 9 else None
+    Engine._topk_blocks for the plan that feeds it). ``params`` is the
+    8-tuple (cmap, n_groups, n_top, lo, span, n_shards, group
+    multiplier, essential group), optionally followed by the fused
+    phrase/ban plan consumed by ``_phrase_prepass`` (None: no
+    phrases or bans)."""
+    cmap_l, ngroups, n_top, lo_l, span_l, ns, gm, eg_l = params[:8]
+    phr = params[8] if len(params) > 8 else None
+    allow_docs = allow_ps = None
+    h_allow = False
     if phr is not None:
         dead_l, allow_docs, allow_ps = _phrase_prepass(
             pdf, phr, dead_l, lo_l, span_l, ns, gm)
@@ -308,7 +312,7 @@ def kernel_core(pdf: pd.DataFrame, params: tuple, dead_l,
         if h_allow:
             # phrase-group allowlist: only docs matching every
             # MUST phrase can satisfy the full conjunction
-            if allow_docs is None or not len(allow_docs):
+            if not len(allow_docs):
                 mask &= False
             else:
                 idx = np.searchsorted(allow_docs, docs)
@@ -664,7 +668,7 @@ class Engine:
     """One Engine pins one index snapshot. ``cache=True`` arms the
     interactive-latency path: dictionary lookups memoize driver-side
     (a repeated term costs ZERO Spark jobs to compile) and the
-    postings/blocks/dictionary tables persist PER BUCKET on first
+    blocks/dictionary tables persist PER BUCKET on first
     touch (``_pruned``) — a query only ever materializes the buckets
     it scans, so at 100 TB the cold buckets genuinely stay on disk
     (persisting the whole table would materialize everything on the
@@ -694,10 +698,14 @@ class Engine:
         ids on the parquet binding (zero Spark jobs), a Spark point
         read on the Iceberg binding. Either way snippets for the k hit
         docs are extracted driver-side from the returned content — k
-        rows, the same budgeted extractor."""
+        rows, the same budgeted extractor.
+
+        Raises ValueError on an index written in an older on-disk
+        format (Catalog.require_format): rebuild it."""
         self.spark = spark
         self.doc_kv = doc_kv
         self.cat = Catalog(spark, index_dir)
+        self.cat.require_format()
         self._pin_props()
         self._cache = cache
         self._tables: dict[str, DataFrame] = {}
@@ -773,8 +781,6 @@ class Engine:
             self._bases = {}
             self._dsets = {}
             self._dead = None
-            if hasattr(self, "_blocks_pos_"):
-                del self._blocks_pos_
             self._pin_props()
             self._snap = cur
 
@@ -1064,7 +1070,8 @@ class Engine:
         """``mode``: ``"blocks"`` (default) is the serving plan — the
         packed-block kernel, driver-side in one job when the query's
         postings fit one shard; ``"df"`` is the Catalyst reference plan
-        over exploded posting rows (the ``ir_engine_topk`` oracle row).
+        over posting rows decoded from the blocks (the
+        ``ir_engine_topk`` oracle row).
 
         ``timeout_s``: Q9 time-limited search (the reference's 30 s
         TimeLimitingCollector, Searching.java:169-200) — cancels the
@@ -1159,171 +1166,166 @@ class Engine:
         if pplan["impossible"] or (clauses.empty and not pplan["must"]):
             return SearchResult(empty, n_groups, len(clauses), processed)
         n_pg = len({p["grp"] for p in pplan["must"]})
-        if mode == "blocks" and self._blocks_pos:
+        if mode == "blocks":
             # FUSED blocks path (VERDICT r4 #2): term scoring, phrase
             # position decode + adjacency, and MUST_NOT exclusion all
             # run inside the one sharded kernel over the packed-block
-            # surface — no separate Python stages, no postings-row
-            # scan, and phrase-ONLY queries ride the same kernel
+            # surface — no separate Python stages, and phrase-ONLY
+            # queries ride the same kernel
             pdf, total_hits, rel, bstats = self._topk_blocks(
-                clauses, k + offset, n_groups - n_pg, n_pg, None,
-                None, partial_sink, pplan=pplan)
+                clauses, k + offset, n_groups - n_pg, n_pg, partial_sink,
+                pplan=pplan)
             hits = pdf.iloc[offset:offset + k].reset_index(drop=True)
             hits.insert(0, "rank",
                         np.arange(offset + 1, offset + 1 + len(hits)))
             return self._assemble(hits, clauses, pplan, n_groups,
                                   processed, q, total_hits, rel,
                                   bstats, with_fields, snippets, debug)
-        # pre-pos_bytes indexes and df mode read phrase positions from
-        # the postings row surface
-        must_df, banned = self._phrase_frames(pplan, "rows")
-        if mode == "df" or clauses.empty:
-            # The aggregated scoring plan is memoized per EXACT query
-            # fingerprint — full-precision clause boosts + phrase and
-            # prohibited structure (the human-readable `processed`
-            # string rounds boosts to 3 significant digits, which
-            # could collide two different weightings onto one cached
-            # plan). Per-term idf/avgdl derive from the pinned
-            # snapshot, so they need no keying; each hit still runs a
-            # fresh job.
-            dkey = None
-            if self._cache:
-                cfp = tuple(sorted(
-                    (int(r.term_id), int(r.grp), float(r.boost))
-                    for r in clauses.itertuples()))
-                pfp = tuple(sorted(
-                    (int(p["grp"]), p["fld"], tuple(p["terms"]),
-                     float(p["boost"])) for p in pplan["must"]))
-                nfp = tuple(sorted((p["fld"], tuple(p["terms"]))
-                                   for p in pplan["must_not"]))
-                dkey = ("df", cfp, pfp, nfp,
-                        tuple(pplan["banned_tids"]), n_groups)
-            agg = self._plan_get(dkey) if dkey else None
-            if agg is None:
-                parts = []
-                if not clauses.empty:
-                    parts.append(self._score_dataframe(clauses))
-                if must_df is not None:
-                    parts.append(must_df)
-                scored = parts[0]
-                for p in parts[1:]:
-                    scored = scored.unionByName(p)
-                if n_groups == 1:
-                    # single MUST group: every matching doc satisfies
-                    # the conjunction — the countDistinct (an Expand +
-                    # second agg phase) is pure overhead
-                    agg = scored.groupBy("doc_id").agg(
-                        F.sum("score").alias("score"))
-                elif n_groups <= 62:
-                    # conjunction via a GROUP BITMASK folded in the
-                    # SAME hash agg as the score sum: one partial+final
-                    # aggregate, no Expand (countDistinct doubles every
-                    # input row into a second agg phase — the round-3
-                    # search_conj_df regression). Group ids are dense
-                    # in [0, n_groups); a group whose terms are absent
-                    # from the index never sets its bit, so no doc
-                    # reaches the full mask — same semantics
-                    full = (1 << n_groups) - 1
-                    agg = (
-                        scored.groupBy("doc_id")
-                        .agg(F.sum("score").alias("score"),
-                             F.bit_or(F.expr("shiftleft(1L, grp)"))
-                             .alias("_gm"))
-                        .where(F.col("_gm") == full).drop("_gm")
-                    )
-                else:
-                    agg = (
-                        scored.groupBy("doc_id")
-                        .agg(F.sum("score").alias("score"),
-                             F.countDistinct("grp").alias("_ng"))
-                        .where(F.col("_ng") == n_groups).drop("_ng")
-                    )
-                if banned is not None:
-                    agg = agg.join(banned, "doc_id", "leftanti")
-                # tombstones must also gate PHRASE matches: term scores
-                # are filtered inside _score_dataframe, but phrase
-                # frames read postings raw (delete is metadata-only —
-                # dead rows remain), so a phrase-only query would
-                # resurrect deleted docs here
-                tomb = self.cat.tombstones()
-                if tomb is not None:
-                    # no broadcast hint: at 10^10 tombstones a forced
-                    # broadcast OOMs the driver — AQE picks the
-                    # strategy (blocks mode co-groups for same reason)
-                    agg = agg.join(tomb, "doc_id", "leftanti")
-                if dkey:
-                    self._plan_put(dkey, agg)
-            # Q10 total hits in the SAME job as the top-k: an
-            # Observation (CollectMetrics node) counts the rows flowing
-            # out of the conjunction filter while TakeOrderedAndProject
-            # consumes them — exact count, zero extra jobs or scans.
-            # (Round 2 ran a concurrent count() job instead; the two
-            # jobs raced for the same cores and nearly doubled latency.
-            # Lucene gets the total for free inside one collector pass
-            # — this is the Spark analog.)
-            if partial_sink is not None:
-                # Q9 partial results for the DF PLAN (VERDICT r4 #5):
-                # the single TakeOrderedAndProject job is all-or-
-                # nothing under a cancel, so with a deadline armed the
-                # top-k runs as per-partition local top-n rows (+ one
-                # exact-count sentinel each, the kernel's output
-                # contract) streamed through the same toLocalIterator
-                # sink — a timeout merges whatever partitions landed,
-                # every query shape included (Searching.java:169-200).
-                # np.round is HALF_EVEN like the bround below, so the
-                # partition cut is rank-identical to the one-job path.
-                nn = offset + k
-
-                def ptopk(batches):
-                    frames = [b for b in batches if len(b)]
-                    if not frames:
-                        return
-                    b = pd.concat(frames, ignore_index=True)
-                    ok = np.round(
-                        b["score"].to_numpy(np.float64) * 1e9)
-                    sel = np.lexsort(
-                        (b["doc_id"].to_numpy(), -ok))[:nn]
-                    out = b.iloc[sel][["doc_id", "score"]].copy()
-                    out["n_hits"] = 0
-                    out["n_skipped"] = 0
-                    out["n_lossy"] = 0
-                    sent = pd.DataFrame(
-                        {"doc_id": [-1], "score": [0.0],
-                         "n_hits": [int(len(b))], "n_skipped": [0],
-                         "n_lossy": [0]})
-                    yield pd.concat([out, sent], ignore_index=True)
-
-                local = agg.mapInPandas(
-                    ptopk, "doc_id long, score double, n_hits long, "
-                           "n_skipped long, n_lossy long")
-                allpdf = self._collect_kernel(
-                    local, partial_sink, (nn, 0.0, 0, 0, 0))
-                pdf, total_hits, rel, _st = self._finish_blocks(
-                    allpdf, nn, 0.0, 0, 0, 0)
-                bstats = None
+        # df mode: the Catalyst reference plan over posting rows
+        # decoded from the blocks (phrases and bans included)
+        must_df, banned = self._phrase_frames(pplan)
+        # The aggregated scoring plan is memoized per EXACT query
+        # fingerprint — full-precision clause boosts + phrase and
+        # prohibited structure (the human-readable `processed`
+        # string rounds boosts to 3 significant digits, which
+        # could collide two different weightings onto one cached
+        # plan). Per-term idf/avgdl derive from the pinned
+        # snapshot, so they need no keying; each hit still runs a
+        # fresh job.
+        dkey = None
+        if self._cache:
+            cfp = tuple(sorted(
+                (int(r.term_id), int(r.grp), float(r.boost))
+                for r in clauses.itertuples()))
+            pfp = tuple(sorted(
+                (int(p["grp"]), p["fld"], tuple(p["terms"]),
+                 float(p["boost"])) for p in pplan["must"]))
+            nfp = tuple(sorted((p["fld"], tuple(p["terms"]))
+                               for p in pplan["must_not"]))
+            dkey = ("df", cfp, pfp, nfp,
+                    tuple(pplan["banned_tids"]), n_groups)
+        agg = self._plan_get(dkey) if dkey else None
+        if agg is None:
+            parts = []
+            if not clauses.empty:
+                parts.append(self._score_dataframe(clauses))
+            if must_df is not None:
+                parts.append(must_df)
+            scored = parts[0]
+            for p in parts[1:]:
+                scored = scored.unionByName(p)
+            if n_groups == 1:
+                # single MUST group: every matching doc satisfies
+                # the conjunction — the countDistinct (an Expand +
+                # second agg phase) is pure overhead
+                agg = scored.groupBy("doc_id").agg(
+                    F.sum("score").alias("score"))
+            elif n_groups <= 62:
+                # conjunction via a GROUP BITMASK folded in the
+                # SAME hash agg as the score sum: one partial+final
+                # aggregate, no Expand (countDistinct doubles every
+                # input row into a second agg phase — the round-3
+                # search_conj_df regression). Group ids are dense
+                # in [0, n_groups); a group whose terms are absent
+                # from the index never sets its bit, so no doc
+                # reaches the full mask — same semantics
+                full = (1 << n_groups) - 1
+                agg = (
+                    scored.groupBy("doc_id")
+                    .agg(F.sum("score").alias("score"),
+                         F.bit_or(F.expr("shiftleft(1L, grp)"))
+                         .alias("_gm"))
+                    .where(F.col("_gm") == full).drop("_gm")
+                )
             else:
-                from pyspark.sql import Observation
-                obs = Observation()
-                observed = agg.observe(obs,
-                                       F.count(F.lit(1)).alias("n"))
-                # the ORDER key (not the score) is quantized to 1e-9
-                # in BOTH physical plans: the df plan's float-sum
-                # order can differ from the kernel's deterministic
-                # term-sorted accumulation by one ULP, which would
-                # swap exactly-tied neighbors between plans —
-                # quantized, ties collapse onto the doc_id tiebreak
-                # identically everywhere. bround = HALF_EVEN, the same
-                # rounding mode as the kernel's np.round (F.round is
-                # HALF_UP and would disagree at exact half-quanta)
-                okey = F.bround(F.col("score") * F.lit(1e9))
-                pdf = (observed.orderBy(okey.desc(), F.asc("doc_id"))
-                       .limit(offset + k).toPandas())
-                total_hits, rel = int(obs.get["n"]), "eq"
-                bstats = None
+                agg = (
+                    scored.groupBy("doc_id")
+                    .agg(F.sum("score").alias("score"),
+                         F.countDistinct("grp").alias("_ng"))
+                    .where(F.col("_ng") == n_groups).drop("_ng")
+                )
+            if banned is not None:
+                agg = agg.join(banned, "doc_id", "leftanti")
+            # tombstones must also gate PHRASE matches: term scores
+            # are filtered inside _score_dataframe, but phrase
+            # frames decode blocks raw (delete is metadata-only —
+            # dead postings remain), so a phrase-only query would
+            # resurrect deleted docs here
+            tomb = self.cat.tombstones()
+            if tomb is not None:
+                # no broadcast hint: at 10^10 tombstones a forced
+                # broadcast OOMs the driver — AQE picks the
+                # strategy (blocks mode co-groups for same reason)
+                agg = agg.join(tomb, "doc_id", "leftanti")
+            if dkey:
+                self._plan_put(dkey, agg)
+        # Q10 total hits in the SAME job as the top-k: an
+        # Observation (CollectMetrics node) counts the rows flowing
+        # out of the conjunction filter while TakeOrderedAndProject
+        # consumes them — exact count, zero extra jobs or scans.
+        # (Round 2 ran a concurrent count() job instead; the two
+        # jobs raced for the same cores and nearly doubled latency.
+        # Lucene gets the total for free inside one collector pass
+        # — this is the Spark analog.)
+        if partial_sink is not None:
+            # Q9 partial results for the DF PLAN (VERDICT r4 #5):
+            # the single TakeOrderedAndProject job is all-or-
+            # nothing under a cancel, so with a deadline armed the
+            # top-k runs as per-partition local top-n rows (+ one
+            # exact-count sentinel each, the kernel's output
+            # contract) streamed through the same toLocalIterator
+            # sink — a timeout merges whatever partitions landed,
+            # every query shape included (Searching.java:169-200).
+            # np.round is HALF_EVEN like the bround below, so the
+            # partition cut is rank-identical to the one-job path.
+            nn = offset + k
+
+            def ptopk(batches):
+                frames = [b for b in batches if len(b)]
+                if not frames:
+                    return
+                b = pd.concat(frames, ignore_index=True)
+                ok = np.round(
+                    b["score"].to_numpy(np.float64) * 1e9)
+                sel = np.lexsort(
+                    (b["doc_id"].to_numpy(), -ok))[:nn]
+                out = b.iloc[sel][["doc_id", "score"]].copy()
+                out["n_hits"] = 0
+                out["n_skipped"] = 0
+                out["n_lossy"] = 0
+                sent = pd.DataFrame(
+                    {"doc_id": [-1], "score": [0.0],
+                     "n_hits": [int(len(b))], "n_skipped": [0],
+                     "n_lossy": [0]})
+                yield pd.concat([out, sent], ignore_index=True)
+
+            local = agg.mapInPandas(
+                ptopk, "doc_id long, score double, n_hits long, "
+                       "n_skipped long, n_lossy long")
+            allpdf = self._collect_kernel(
+                local, partial_sink, (nn, 0.0, 0, 0, 0))
+            pdf, total_hits, rel, _st = self._finish_blocks(
+                allpdf, nn, 0.0, 0, 0, 0)
+            bstats = None
         else:
-            pdf, total_hits, rel, bstats = self._topk_blocks(
-                clauses, k + offset, n_groups - n_pg, n_pg, must_df,
-                banned, partial_sink)
+            from pyspark.sql import Observation
+            obs = Observation()
+            observed = agg.observe(obs,
+                                   F.count(F.lit(1)).alias("n"))
+            # the ORDER key (not the score) is quantized to 1e-9
+            # in BOTH physical plans: the df plan's float-sum
+            # order can differ from the kernel's deterministic
+            # term-sorted accumulation by one ULP, which would
+            # swap exactly-tied neighbors between plans —
+            # quantized, ties collapse onto the doc_id tiebreak
+            # identically everywhere. bround = HALF_EVEN, the same
+            # rounding mode as the kernel's np.round (F.round is
+            # HALF_UP and would disagree at exact half-quanta)
+            okey = F.bround(F.col("score") * F.lit(1e9))
+            pdf = (observed.orderBy(okey.desc(), F.asc("doc_id"))
+                   .limit(offset + k).toPandas())
+            total_hits, rel = int(obs.get["n"]), "eq"
+            bstats = None
         hits = pdf.iloc[offset:offset + k].reset_index(drop=True)
         hits.insert(0, "rank", np.arange(offset + 1, offset + 1 + len(hits)))
         return self._assemble(hits, clauses, pplan, n_groups, processed,
@@ -1406,13 +1408,14 @@ class Engine:
                  n_groups: int, pplan: dict | None = None) -> list[str]:
         """Q12 per-hit score breakdown (Searching.java:328-330): one
         line per matched clause — term AND phrase — with the BM25
-        components, recomputed from postings for the k hit docs only."""
+        components, recomputed from the blocks for the k hit docs only
+        (only blocks whose doc range holds a hit are decoded)."""
         ids = [int(d) for d in hits["doc_id"]]
-        # phrase-clause lines: ptf/dl per hit doc from the positional
-        # postings (same chain the scorer used, restricted to k docs)
+        # phrase-clause lines: ptf/dl per hit doc from the decoded
+        # positions (same chain the scorer used, restricted to k docs)
         phrase_lines: dict[int, list[str]] = {}
         for p in (pplan or {}).get("must", []):
-            m = (self._phrase_match(p)
+            m = (self._phrase_match(p, ids)
                  .where(F.col("doc_id").isin(ids)).collect())
             for r in m:
                 ptf, dl = float(r["ptf"]), float(r["dl"])
@@ -1423,13 +1426,10 @@ class Engine:
                     f"g{p['grp']}:{p['fld']}:\"{' '.join(p['terms'])}\" "
                     f"idf_p={p['idf_p']:.4g} ptf={ptf:.0f} dl={dl:.0f} "
                     f"score={s:.6g}")
-        posts = (
-            self._pruned("postings", "bucket", list(set(clauses["bucket"])))
-            .where(F.col("term_id").isin([int(t) for t in
-                                          set(clauses["term_id"])]))
-            .where(F.col("doc_id").isin(ids))
-            .select("term_id", "doc_id", "tf", "wsum", "dl")
-            .toPandas())
+        posts = (self._decoded(
+                     sorted({int(t) for t in clauses["term_id"]}),
+                     ("tf", "wsum", "dl"), ids)
+                 .where(F.col("doc_id").isin(ids)).toPandas())
         dic = {int(r["term_id"]): (r["field"], r["term"]) for r in
                self.cat.read("dictionary")
                .where(F.col("term_id").isin([int(t) for t in
@@ -1459,106 +1459,29 @@ class Engine:
         return out
 
     # ------------------------------------------------------ phrase frames
-    @property
-    def _blocks_pos(self) -> bool:
-        """True when the packed blocks carry pos_bytes (indexes built
-        before round 4 don't; phrase queries then read the row
-        surface). Resolved once per snapshot from the blocks schema
-        (the arrow dataset's on the parquet binding: no Spark job)."""
-        if not hasattr(self, "_blocks_pos_"):
-            dset = self._dset("blocks")
-            if dset is not None:
-                self._blocks_pos_ = "pos_bytes" in dset.schema.names
-            else:
-                try:
-                    self._blocks_pos_ = "pos_bytes" in \
-                        self._base("blocks").columns
-                except Exception:
-                    self._blocks_pos_ = False
-        return self._blocks_pos_
+    def _decoded(self, tids: list[int], cols: tuple,
+                 ids: list[int] | None = None) -> DataFrame:
+        """Posting rows (term_id, doc_id, *cols) of the given terms,
+        decoded from a bucket- and term-pruned blocks scan (only the
+        byte columns ``cols`` need are read). ``ids`` restricts the
+        decode to blocks whose doc range holds one of those docs."""
+        bdf = (self._pruned("blocks", "bucket",
+                            sorted({t % self.n_buckets for t in tids}))
+               .where(F.col("term_id").isin([int(t) for t in tids])))
+        if ids:
+            bdf = bdf.where((F.col("last_doc") >= min(ids))
+                            & (F.col("first_doc") <= max(ids)))
+        return blk.decoded_postings(bdf, cols)
 
-    def _phrase_postings(self, tids: list[int], surface: str = "rows"):
-        """(term_id, doc_id, positions, dl) for the given terms —
-        from the exploded postings rows, or decoded out of the packed
-        blocks (``surface="blocks"``: the Lucene positions-file analog,
-        so phrase queries in blocks mode never scan the row surface)."""
-        if surface == "blocks":
-            return self._positions_from_blocks(tids)
-        n_buckets = self.n_buckets
-        buckets = sorted({t % n_buckets for t in tids})
-        return (self._pruned("postings", "bucket", buckets)
-                .where(F.col("term_id").isin([int(t) for t in tids]))
-                .select("term_id", "doc_id", "positions", "dl"))
-
-    def _positions_from_blocks(self, tids: list[int]) -> DataFrame:
-        """Positional posting rows decoded from the packed blocks:
-        bucket- and term-pruned scan, one vectorized decode per block
-        (w_bytes is never read — column pruning holds), rows identical
-        to the postings surface for these terms, so every phrase
-        consumer downstream is byte-for-byte unchanged."""
-        buckets = sorted({t % self.n_buckets for t in tids})
-        bdf = (self._pruned("blocks", "bucket", buckets)
-               .where(F.col("term_id").isin([int(t) for t in tids]))
-               .select("term_id", "n_docs", "doc_bytes", "tf_bytes",
-                       "dl_bytes", "pos_bytes"))
-
-        def fn(batches):
-            from mias_spec import codec as C
-            for pdf in batches:
-                terms, docs_c, pos_c, dl_c = [], [], [], []
-                for row in pdf.itertuples():
-                    n = int(row.n_docs)
-                    docs = C.decode_doc_ids(row.doc_bytes, n)
-                    tfs = C.decode_varints(row.tf_bytes, n).astype(
-                        np.int64)
-                    dls = C.decode_varints(row.dl_bytes, n).astype(
-                        np.int64)
-                    flat = blk.unpack_positions(row, tfs)
-                    cuts = np.cumsum(tfs)[:-1]
-                    terms.append(np.full(n, row.term_id, np.int64))
-                    docs_c.append(docs)
-                    dl_c.append(dls)
-                    pos_c.extend(
-                        a.astype(np.int32) for a in np.split(flat, cuts))
-                if not terms:
-                    continue
-                yield pd.DataFrame({
-                    "term_id": np.concatenate(terms),
-                    "doc_id": np.concatenate(docs_c),
-                    "positions": pos_c,
-                    "dl": np.concatenate(dl_c)})
-
-        return bdf.mapInPandas(
-            fn, "term_id long, doc_id long, positions array<int>, dl long")
-
-    def _term_docs_from_blocks(self, tids: list[int]) -> DataFrame:
-        """Doc ids of the given terms decoded from packed blocks —
-        the MUST_NOT exclusion set. Only doc_bytes is read/decoded."""
-        buckets = sorted({t % self.n_buckets for t in tids})
-        bdf = (self._pruned("blocks", "bucket", buckets)
-               .where(F.col("term_id").isin([int(t) for t in tids]))
-               .select("n_docs", "doc_bytes"))
-
-        def fn(batches):
-            from mias_spec import codec as C
-            for pdf in batches:
-                outs = [C.decode_doc_ids(row.doc_bytes, int(row.n_docs))
-                        for row in pdf.itertuples()]
-                if outs:
-                    yield pd.DataFrame(
-                        {"doc_id": np.concatenate(outs)})
-
-        return bdf.mapInPandas(fn, "doc_id long")
-
-    def _phrase_match(self, p: dict, surface: str = "rows") -> DataFrame:
+    def _phrase_match(self, p: dict, ids: list[int] | None = None
+                      ) -> DataFrame:
         """Docs matching one phrase clause, with the phrase tf:
-        chained equi-joins on doc_id over the phrase terms' postings
-        (bucket- and term-pruned scans — each side is ONE term's
-        posting list), adjacency verified with native array functions.
-        ``surface`` picks where positions come from (posting rows or
-        packed blocks) — the frames are identical, so the match and
-        scoring logic is shared. Returns (doc_id, ptf, dl)."""
-        posts = self._phrase_postings(p["tids"], surface)
+        chained equi-joins on doc_id over the phrase terms' decoded
+        positional postings (bucket- and term-pruned block scans — each
+        side is ONE term's posting list, the Lucene positions-file
+        analog), adjacency verified with native array functions.
+        ``ids``: see _decoded. Returns (doc_id, ptf, dl)."""
+        posts = self._decoded(p["tids"], ("dl", "positions"), ids)
         cur = (posts.where(F.col("term_id") == int(p["tids"][0]))
                .select("doc_id", F.col("positions").alias("P"), "dl"))
         for t in p["tids"][1:]:
@@ -1572,7 +1495,7 @@ class Engine:
         return cur.select("doc_id",
                           F.size("P").cast("double").alias("ptf"), "dl")
 
-    def _phrase_frames(self, pplan, surface: str = "rows"
+    def _phrase_frames(self, pplan
                        ) -> tuple[DataFrame | None, DataFrame | None]:
         """(must_scores, banned_docs): must_scores has one row per
         (doc, phrase clause) with columns (doc_id, grp, score) — the
@@ -1582,7 +1505,7 @@ class Engine:
         a driver-side collect."""
         must = None
         for p in pplan["must"]:
-            m = self._phrase_match(p, surface)
+            m = self._phrase_match(p)
             score = (
                 F.lit(p["boost"] * p["w"] * p["idf_p"])
                 * F.col("ptf") * (BM25_K1 + 1.0)
@@ -1595,16 +1518,12 @@ class Engine:
         banned = None
         parts = []
         if pplan["banned_tids"]:
-            if surface == "blocks":
-                # prohibited terms need only their DOC SETS: decode
-                # doc_bytes alone (positions/tf/dl stay unread)
-                parts.append(self._term_docs_from_blocks(
-                    pplan["banned_tids"]))
-            else:
-                parts.append(self._phrase_postings(pplan["banned_tids"])
-                             .select("doc_id"))
+            # prohibited terms need only their DOC SETS: decode
+            # doc_bytes alone (positions/tf/dl stay unread)
+            parts.append(self._decoded(pplan["banned_tids"], ())
+                         .select("doc_id"))
         for p in pplan["must_not"]:
-            parts.append(self._phrase_match(p, surface).select("doc_id"))
+            parts.append(self._phrase_match(p).select("doc_id"))
         if parts:
             banned = parts[0]
             for x in parts[1:]:
@@ -1617,12 +1536,8 @@ class Engine:
         cdf = self.spark.createDataFrame(
             clauses[["term_id", "grp", "boost", "idf", "avgdl",
                      "bucket"]], CLAUSE_SCHEMA)
-        posts = (
-            self._pruned("postings", "bucket", list(set(clauses["bucket"])))
-            .where(F.col("term_id").isin([int(t) for t in
-                                          set(clauses["term_id"])]))
-            .select("term_id", "doc_id", "tf", "wsum", "dl")
-        )
+        posts = self._decoded(sorted({int(t) for t in clauses["term_id"]}),
+                              ("tf", "wsum", "dl"))
         tomb = self.cat.tombstones()
         if tomb is not None:
             # no broadcast hint (AQE decides): see _search_body
@@ -1640,8 +1555,6 @@ class Engine:
     # ---------------------------------------------- block-max top-k scorer
     def _topk_blocks(self, clauses: pd.DataFrame, topn: int,
                      n_groups: int, n_pgroups: int = 0,
-                     allow_df: DataFrame | None = None,
-                     banned_df: DataFrame | None = None,
                      partial_sink: dict | None = None,
                      pplan: dict | None = None,
                      ) -> tuple[pd.DataFrame, int, str, dict]:
@@ -1650,19 +1563,14 @@ class Engine:
         per-call blocks stats) — stats are per-CALL values so
         concurrent searches on one Engine never cross-talk.
 
-        ``n_groups`` here counts TERM groups only. Phrases and
-        MUST_NOT terms arrive one of two ways:
-
-        * FUSED (``pplan``, pos_bytes indexes): the phrase/banned
-          terms' blocks join the same sharded scan — pos_bytes kept
-          only for phrase terms, doc_bytes alone for banned-only terms
-          — and the kernel's `_phrase_prepass` decodes positions,
-          verifies adjacency and builds the allow/dead sets in-task.
-          No extra Python stages, no allowlist aggregation job.
-        * legacy (pre-pos_bytes indexes): ``allow_df`` carries
-          (doc_id, grp, score) phrase matches from the postings rows
-          and ``banned_df`` the MUST_NOT docs; both ride the
-          co-grouped exclusion channel with the tombstones.
+        ``n_groups`` here counts TERM groups only (``n_pgroups`` the
+        phrase groups). Phrases and MUST_NOT terms are FUSED
+        (``pplan``): the phrase/banned terms' blocks join the same
+        sharded scan — pos_bytes kept only for phrase terms, doc_bytes
+        alone for banned-only terms — and the kernel's
+        `_phrase_prepass` decodes positions, verifies adjacency and
+        builds the allow/dead sets in-task. No extra Python stages, no
+        allowlist aggregation job.
 
         Physical plan (the WAND-style scale path, SURVEY.md §2.4 Q8):
 
@@ -1737,12 +1645,11 @@ class Engine:
             }
         # prepared-plan hit: re-execute the stored plan (fresh job, no
         # plan construction). The fused phrase/ban structure is part of
-        # the key; legacy allow/banned frames are rebuilt per call, so
-        # those plans are not memoized. An armed deadline keys its own
-        # (always distributed) plans, so it never hits a driver-side one
+        # the key. An armed deadline keys its own (always distributed)
+        # plans, so it never hits a driver-side one
         streaming = partial_sink is not None
         pkey = None
-        if self._cache and allow_df is None and banned_df is None:
+        if self._cache:
             ffp = None
             if fused:
                 ffp = (tuple(fused["must"]), tuple(fused["mustnot"]),
@@ -1806,9 +1713,7 @@ class Engine:
                     if "df" in clauses.columns and len(clauses) else
                     (0 if fused else None))
         if (local_ok and df_total is not None
-                and df_total + extra_df <= _SHARD_POSTINGS
-                and banned_df is None
-                and (n_pgroups == 0 or fused is not None)):
+                and df_total + extra_df <= _SHARD_POSTINGS):
             if pkey is not None:
                 self._plan_put(pkey, ((terms, buckets), clauses, cmap,
                                       max_boost, fused, dead, "fast"))
@@ -1828,9 +1733,7 @@ class Engine:
         # unfiltered single-term-group query (the fast path filters
         # dead-holding blocks out of its floor instead); `optimize`
         # restores pruning after deletes
-        need_theta = (n_groups == 1 and tomb is None
-                      and banned_df is None and n_pgroups == 0
-                      and fused is None)
+        need_theta = n_groups == 1 and tomb is None and fused is None
         # ---- driver metadata: ONE bounded row per term, never O(df).
         # The rescaled (query-fresh idf/avgdl) bounds are computed as
         # Catalyst expressions and reduced Spark-side: a window rank
@@ -2009,14 +1912,12 @@ class Engine:
             [g for g, *_ in (fused["must"] if fused else [])]
         gmax = max(gvals, default=0) + 1
         gmult = 1 << max(gmax.bit_length(), 1)
-        has_allow = n_pgroups > 0 and fused is None
         params = (cmap, n_groups, topn, lo, span, n_shards, gmult, eg,
-                  has_allow, fused)
+                  fused)
         out_schema = ("doc_id long, score double, n_hits long, "
                       "n_skipped long, n_lossy long")
 
-        if n_shards == 1 and local_ok and banned_df is None \
-                and not has_allow:
+        if n_shards == 1 and local_ok:
             # single-shard short-circuit: the whole query fits one
             # kernel invocation (≤ _SHARD_POSTINGS postings, known
             # BEFORE launching anything), so collect the few compressed
@@ -2036,45 +1937,21 @@ class Engine:
 
         bc = self.spark.sparkContext.broadcast(params)
 
-        def core(pdf, dead_l, allow_docs=None, allow_ps=None):
-            return kernel_core(pdf, bc.value, dead_l, allow_docs,
-                               allow_ps)
+        def core(pdf, dead_l):
+            return kernel_core(pdf, bc.value, dead_l)
 
-        right_side = tomb is not None or banned_df is not None \
-            or has_allow
+        right_side = tomb is not None
         if right_side:
-            # doc-level side inputs (tombstones, MUST_NOT docs, phrase
-            # allowlist + scores) co-grouped by the SAME shard key: each
-            # task receives its shard's slice — nothing through the
-            # driver, scale-safe at 10^10 tombstones/matches
-            parts = [x.select("doc_id") for x in (tomb, banned_df)
-                     if x is not None]
-            right = None
-            if parts:
-                dead_df = parts[0]
-                for x in parts[1:]:
-                    dead_df = dead_df.unionByName(x)
-                right = dead_df.select(
-                    "doc_id", F.lit(0).alias("typ"),
-                    F.lit(0.0).alias("pscore"))
-            if has_allow:
-                allow = (allow_df.groupBy("doc_id")
-                         .agg(F.sum("score").alias("pscore"),
-                              F.countDistinct("grp").alias("_np"))
-                         .where(F.col("_np") == n_pgroups)
-                         .select("doc_id", F.lit(1).alias("typ"), "pscore"))
-                right = allow if right is None else right.unionByName(allow)
-            rshard = right.withColumn("shard", s_of("doc_id"))
+            # tombstones co-grouped by the SAME shard key: each task
+            # receives its shard's slice — nothing through the driver,
+            # scale-safe at 10^10 tombstones
+            rshard = tomb.select("doc_id").withColumn("shard",
+                                                      s_of("doc_id"))
 
             def cokernel(left: pd.DataFrame, rpdf: pd.DataFrame
                          ) -> pd.DataFrame:
-                d = rpdf[rpdf["typ"] == 0]
-                dead_l = np.sort(d["doc_id"].to_numpy(np.int64))
-                a = rpdf[rpdf["typ"] == 1]
-                ad = a["doc_id"].to_numpy(np.int64)
-                ap = a["pscore"].to_numpy(np.float64)
-                aperm = np.argsort(ad, kind="stable")
-                return core(left, dead_l, ad[aperm], ap[aperm])
+                return core(left, np.sort(rpdf["doc_id"].to_numpy(
+                    np.int64)))
 
             local = (withmeta.groupBy("shard")
                      .cogroup(rshard.groupBy("shard"))
@@ -2148,16 +2025,10 @@ class Engine:
         """Bucket- and term-pruned Spark scan of the scoring terms'
         blocks, pos_bytes and the spent partition column dropped (the
         biggest per-posting payload stays out of the scan, the shard
-        shuffle, the Arrow transfer and the cached slices; the drop is
-        a no-op on pre-pos_bytes tables). Pre-snapshot indexes get null
-        idf0/avgdl0, i.e. bound scale 1."""
-        bdf = (self._pruned("blocks", "bucket", buckets)
-               .where(F.col("term_id").isin(terms))
-               .drop("pos_bytes", "bucket"))
-        for c in ("idf0", "avgdl0"):
-            if c not in bdf.columns:
-                bdf = bdf.withColumn(c, F.lit(None).cast("double"))
-        return bdf
+        shuffle, the Arrow transfer and the cached slices)."""
+        return (self._pruned("blocks", "bucket", buckets)
+                .where(F.col("term_id").isin(terms))
+                .drop("pos_bytes", "bucket"))
 
     def _fast_rows(self, terms: list[int], buckets: list[int],
                    fused: dict | None, cmap: dict
@@ -2182,10 +2053,9 @@ class Engine:
         read every column but pos_bytes (null when fused), phrase
         terms keep pos_bytes, banned-only terms read doc_bytes alone
         with null tf/dl/w/pos bytes. None when arrow cannot serve the
-        read: Iceberg binding, unreadable files, or blocks lacking any
-        column of the current format."""
+        read: Iceberg binding or unreadable files."""
         dset = self._dset("blocks")
-        if dset is None or not set(blk._COLS) <= set(dset.schema.names):
+        if dset is None:
             return None
         nb = self.n_buckets
 
@@ -2383,7 +2253,7 @@ class Engine:
             [g for g, *_ in (fused["must"] if fused else [])]
         gmax = max(gvals, default=0) + 1
         gmult = 1 << max(gmax.bit_length(), 1)
-        params = (cmap, n_groups, topn, lo, span, 1, gmult, eg, False,
+        params = (cmap, n_groups, topn, lo, span, 1, gmult, eg,
                   fused)
         allpdf = kernel_core(pdfb, params, dead)
         return self._finish_blocks(allpdf, topn, theta, n_groups, 1,

@@ -11,6 +11,7 @@ def get_spark(app: str = "mias_spark", cpus: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """local[N] session tuned for the sandbox; on a real cluster the
     same settings ride along spark-submit (jobs/*.py)."""
+    from mias_spark.build import N_DICT_BUCKETS
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     sp = shuffle_partitions or int(os.environ.get(
         "MIAS_SHUFFLE_PARTITIONS", str(min(int(cpus) * 2, 64))))
@@ -32,6 +33,12 @@ def get_spark(app: str = "mias_spark", cpus: str | None = None,
         # >= one task per core (default 4 MiB under-parallelizes the
         # Arrow-UDF tokenize stage on compact corpora)
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))
+        # list a table's partition dirs on the driver, never in a Spark
+        # job: the dictionary's N_DICT_BUCKETS dbucket dirs are past
+        # the default threshold (32), so every dictionary open (query
+        # compile fallback, each ops step) paid a listing job
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2 * N_DICT_BUCKETS))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -60,11 +60,22 @@ def test_doc_ids_dense_and_oracle_aligned(spark, tiny_build):
 
 
 def test_postings_match_oracle_counts(spark, tiny_build):
+    """Posting rows decoded from the packed blocks (the one posting
+    surface) are exactly the oracle's postings: same (doc, field,
+    term) keys with the same tf, dl and mean weight."""
     c, cat, oidx, ix = tiny_build
-    n = cat.read("postings").count()
-    assert n == len(oidx.postings)
+    posts = (blk.decoded_postings(cat.read("blocks"), ("tf", "wsum", "dl"))
+             .join(cat.read_dictionary().select("term_id", "field", "term"),
+                   "term_id"))
+    got = posts.toPandas()
+    assert len(got) == len(oidx.postings)
+    keys = ["doc_id", "field", "term"]
+    m = got.merge(oidx.postings, on=keys, suffixes=("", "_o"))
+    assert len(m) == len(oidx.postings)
+    assert (m["tf"] == m["tf_o"]).all() and (m["dl"] == m["dl_o"]).all()
+    assert np.allclose(m["wsum"] / m["tf"], m["avg_w"], atol=1e-9)
     # sum(tf) per (doc, field) == doc_norms.dl
-    chk = (cat.read("postings")
+    chk = (posts
         .groupBy("doc_id", "field").agg(F.sum("tf").alias("s"))
         .join(cat.read("doc_norms"), ["doc_id", "field"])
         .where(F.col("s") != F.col("dl")).count())
@@ -114,7 +125,7 @@ def test_resume_from_checkpoint(spark, tiny_build, tmp_path):
     assert before == after
     # finished stages were not rebuilt (snapshot ids unchanged)
     m2 = cat2.manifest()
-    for t in ("doc_store", "tokens", "dictionary", "postings"):
+    for t in ("doc_store", "doc_norms", "dictionary"):
         assert m2["tables"][t]["snapshot"] == n_tables_before[t]["snapshot"]
 
 
@@ -179,12 +190,13 @@ def test_catalog_read_uses_recorded_schema(spark, tiny_build, jobs_of):
     """Opening a table on the parquet binding runs no schema-inference
     job: the manifest's recorded schema is handed to the reader, and
     the partition columns come back with their recorded types.
-    merge_schema keeps inference. (The 64-partition dictionary is left
-    out: past 32 partition dirs Spark lists the files in a job of its
-    own, schema or not.)"""
+    merge_schema keeps inference. The 64-partition dictionary is listed
+    driver-side too (session.get_spark raises Spark's parallel
+    partition discovery threshold above its partition count)."""
     from pyspark.sql.types import StructType
     c, cat, oidx, ix = tiny_build
-    for table, part in (("blocks", "bucket"), ("doc_store", "dseg")):
+    for table, part in (("blocks", "bucket"), ("doc_store", "dseg"),
+                        ("dictionary", "dbucket")):
         df, n_jobs = jobs_of(lambda: cat.read(table))
         assert n_jobs == 0, table
         rec = StructType.fromJson(cat.manifest()["tables"][table]["schema"])
@@ -200,8 +212,8 @@ def test_meta_tables_queryable(spark, tiny_build):
     c, cat, oidx, ix = tiny_build
     lin = cat.meta_table("lineage").toPandas()
     assert {"snapshot", "table", "rows"} <= set(lin.columns)
-    assert set(lin["table"]) >= {"doc_store", "tokens", "dictionary",
-                                 "postings", "blocks"}
+    assert set(lin["table"]) >= {"doc_store", "doc_norms", "dictionary",
+                                 "blocks"}
     met = cat.meta_table("metrics").toPandas()
     assert "build_total" in set(met["stage"])
     cps = cat.meta_table("checkpoints").toPandas()

@@ -148,7 +148,7 @@ def test_fused_kernel_empty_phrase_group():
         "mustnot": [], "banned_set": frozenset(),
         "ptids": frozenset({1, 2}), "n_pg": 1,
     }
-    params = ({}, 0, 10, 0, 10_000, 1, 4, -1, False, phr)
+    params = ({}, 0, 10, 0, 10_000, 1, 4, -1, phr)
     out = kernel_core(pdf, params, None)
     assert len(out) == 1 and int(out["doc_id"].iloc[0]) == -1
     assert int(out["n_hits"].iloc[0]) == 0

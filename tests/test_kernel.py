@@ -39,7 +39,7 @@ def _bm25(tf, idf=2.0, avgdl=10.0, dl=10):
 
 def _params(n_top, ngroups=1, gm=2, span=10_000):
     cmap = {7: [(0, 1.0)]}
-    return (cmap, ngroups, n_top, 0, span, 1, gm, -1, False)
+    return (cmap, ngroups, n_top, 0, span, 1, gm, -1)
 
 
 def test_dynamic_theta_skips_low_blocks():
@@ -118,7 +118,7 @@ def test_conjunction_progressive_refinement():
     t3 = _mk_term_blocks(2, {d: 1 for d in range(0, 1000)})    # group 1
     pdf = pd.concat([t1, t2, t3], ignore_index=True)
     cmap = {1: [(0, 1.0)], 2: [(1, 1.0)], 3: [(2, 1.0)]}
-    params = (cmap, 3, 5, 0, 10_000, 1, 4, 0, False)
+    params = (cmap, 3, 5, 0, 10_000, 1, 4, 0)
     out = kernel_core(pdf, params, None)
     sent = out[out["doc_id"] < 0]
     hits = out[out["doc_id"] >= 0]
@@ -149,7 +149,7 @@ def test_conjunctive_dynamic_theta_skips_and_rank_identity():
     pdf = pd.concat([t1, t2], ignore_index=True)
     assert (pdf["term_id"] == 2).sum() == 10
     cmap = {1: [(0, 1.0)], 2: [(1, 1.0)]}
-    params = (cmap, 2, 1, 0, 10_000, 1, 4, 0, False)
+    params = (cmap, 2, 1, 0, 10_000, 1, 4, 0)
     out = kernel_core(pdf, params, None)
     sent = out[out["doc_id"] < 0]
     hits = out[out["doc_id"] >= 0]
@@ -170,7 +170,7 @@ def test_conjunctive_dynamic_theta_skips_and_rank_identity():
         rng.integers(1, 20, size=1280))}
     t2b = _mk_term_blocks(2, big2)
     out2 = kernel_core(pd.concat([t1b, t2b], ignore_index=True),
-                       (cmap, 2, 3, 0, 10_000, 1, 4, 0, False), None)
+                       (cmap, 2, 3, 0, 10_000, 1, 4, 0), None)
     hits2 = out2[out2["doc_id"] >= 0]
     both = sorted(eg2, key=lambda d: (-(_bm25(eg2[d]) + _bm25(big2[d])), d))
     exp = both[:3]
@@ -207,7 +207,7 @@ def test_kernel_property_random_vs_bruteforce():
         gpost = {g: len(groups[g]) for g in range(ngroups)}
         eg = min(gpost, key=lambda g: (gpost[g], g))
         gm = 1 << max(ngroups.bit_length(), 1)
-        params = (cmap, ngroups, n_top, 0, 10_000, 1, gm, eg, False)
+        params = (cmap, ngroups, n_top, 0, 10_000, 1, gm, eg)
         dead_l = np.array(sorted(dead), dtype=np.int64)
         out = kernel_core(pd.concat(frames, ignore_index=True), params,
                           dead_l if len(dead_l) else None)
@@ -247,7 +247,7 @@ def test_conjunctive_floor_multi_term_last_group_exact():
     pdf = pd.concat([_mk_blocks(t1, tid=1), _mk_blocks(t2, tid=2),
                      _mk_blocks(t3, tid=3)], ignore_index=True)
     cmap = {1: [(0, 1.0)], 2: [(1, 1.0)], 3: [(1, 1.0)]}
-    params = (cmap, 2, 1, 0, 10_000, 1, 4, 0, False)
+    params = (cmap, 2, 1, 0, 10_000, 1, 4, 0)
     out = kernel_core(pdf, params, None)
     hits = out[out["doc_id"] >= 0]
     assert [int(d) for d in hits["doc_id"]] == [200]

@@ -153,6 +153,30 @@ def _file_set(path):
     return out
 
 
+def _posting_doc_ids(cat) -> set:
+    """Doc ids holding at least one posting, decoded from the blocks."""
+    from mias_spark import blocks as blk
+    return {r[0] for r in blk.decoded_postings(cat.read("blocks"), ())
+            .select("doc_id").distinct().collect()}
+
+
+def _assert_stats_match_fresh(cat, live: pd.DataFrame) -> None:
+    """The maintained merged dictionary df and per-field stats equal
+    those of a fresh oracle index over the live corpus."""
+    from pyspark.sql import functions as F
+    oidx = oracle.build_index(live.reset_index(drop=True))
+    truth = {(r.field, r.term): int(r.df)
+             for r in oidx.dictionary.itertuples()}
+    merged = {(r["field"], r["term"]): int(r["df"]) for r in
+              cat.read_dictionary().where(F.col("df") != 0).collect()}
+    assert merged == truth
+    fs = cat.props()["field_stats"]
+    assert set(fs) == set(oidx.field_stats)
+    for f, st in oidx.field_stats.items():
+        assert fs[f]["n_docs"] == st["n_docs"], f
+        assert abs(fs[f]["avgdl"] - st["avgdl"]) < 1e-9, f
+
+
 def test_delete_is_metadata_only_and_optimize_purges(spark, tmp_path):
     """Segment model: delete moves NO posting data (tombstone +
     stats refresh only); optimize purges tombstoned docs and restores a
@@ -163,12 +187,10 @@ def test_delete_is_metadata_only_and_optimize_purges(spark, tmp_path):
     ix = str(tmp_path / "ixseg")
     build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
     eng = Engine(spark, ix)
-    before_posts = _file_set(eng.cat.path("postings"))
     before_blocks = _file_set(eng.cat.path("blocks"))
     n = delete_by_path(spark, ix, "src/dir2/")
     assert n > 0
-    # no posting/block files rewritten or removed
-    assert _file_set(eng.cat.path("postings")) == before_posts
+    # no block files rewritten or removed
     assert _file_set(eng.cat.path("blocks")) == before_blocks
     expected = c[~c["path"].str.startswith("src/dir2/")]
     _check_query(spark, ix, expected)
@@ -188,9 +210,7 @@ def test_delete_is_metadata_only_and_optimize_purges(spark, tmp_path):
     assert eng3.cat.tombstones() is None
     store_ids = {r["doc_id"] for r in
                  eng3.cat.read("doc_store").select("doc_id").collect()}
-    post_ids = {r["doc_id"] for r in
-                eng3.cat.read("postings").select("doc_id")
-                .distinct().collect()}
+    post_ids = _posting_doc_ids(eng3.cat)
     assert post_ids <= store_ids
     _check_query(spark, ix, expected)
 
@@ -201,10 +221,10 @@ def test_upsert_appends_segments(spark, tmp_path):
     ix = str(tmp_path / "ixapp")
     build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
     eng = Engine(spark, ix)
-    before = _file_set(eng.cat.path("postings"))
+    before = _file_set(eng.cat.path("blocks"))
     extra = corpus.make_corpus(70).iloc[60:70]
     upsert(spark, ix, spark.createDataFrame(extra))
-    after = _file_set(eng.cat.path("postings"))
+    after = _file_set(eng.cat.path("blocks"))
     assert before <= after and len(after) > len(before)
     expected = pd.concat([c, extra], ignore_index=True)
     _check_query(spark, ix, expected)
@@ -256,8 +276,7 @@ def test_auto_compaction_trigger(spark, tmp_path):
     expected = c[~c["path"].str.contains("src/dir[1235]/", regex=True)]
     store_ids = {r[0] for r in
                  cat3.read("doc_store").select("doc_id").collect()}
-    post_ids = {r[0] for r in cat3.read("postings")
-                .select("doc_id").distinct().collect()}
+    post_ids = _posting_doc_ids(cat3)
     assert post_ids <= store_ids and len(store_ids) == len(expected)
     _check_query(spark, ix, expected)
     # blocks plan agrees and theta pruning is active again
@@ -281,7 +300,6 @@ def test_upsert_is_delta_only(spark, tmp_path):
     eng0 = Engine(spark, ix)
     dict_files = _file_set(eng0.cat.path("dictionary"))
     norms_files = _file_set(eng0.cat.path("doc_norms"))
-    tok_files = _file_set(eng0.cat.path("tokens"))
     # replace one doc + add two new ones
     changed = c.iloc[[3]].copy()
     changed["content"] = ["<html><body><p>quantum data novelterm</p>"
@@ -295,29 +313,16 @@ def test_upsert_is_delta_only(spark, tmp_path):
     assert dict_files <= _file_set(eng.cat.path("dictionary"))
     assert len(_file_set(eng.cat.path("dictionary"))) > len(dict_files)
     assert norms_files <= _file_set(eng.cat.path("doc_norms"))
-    assert tok_files <= _file_set(eng.cat.path("tokens"))
-    # merged df view + arithmetic stats agree with a full recount
-    from mias_spark.ops import live_tokens
+    # merged df view + arithmetic stats agree with a full recount (the
+    # oracle's fresh index over the equivalent live corpus)
     from pyspark.sql import functions as F
-    truth = {(r["field"], r["term"]): r["n"] for r in
-             live_tokens(eng.cat).groupBy("field", "term")
-             .agg(F.count("*").alias("n")).collect()}
-    merged = {(r["field"], r["term"]): r["df"] for r in
-              eng.cat.read_dictionary().where(F.col("df") != 0).collect()}
-    assert merged == truth
-    st = live_tokens(eng.cat).groupBy("doc_id", "field").agg(
-        F.first("dl").alias("dl")).groupBy("field").agg(
-        F.count("*").alias("n"), F.avg("dl").alias("a")).collect()
-    for r in st:
-        fs = eng.field_stats[r["field"]]
-        assert fs["n_docs"] == r["n"]
-        assert abs(fs["avgdl"] - r["a"]) < 1e-9
+    expected = pd.concat([c.drop(index=3), changed, extra],
+                         ignore_index=True)
+    _assert_stats_match_fresh(eng.cat, expected)
     # new term got a fresh id above the high-water mark
     nt = eng.cat.read_dictionary().where(F.col("term") == "novelterm")
     assert nt.count() == 1
     # search correctness after the delta (oracle over equivalent corpus)
-    expected = pd.concat([c.drop(index=3), changed, extra],
-                         ignore_index=True)
     _check_query(spark, ix, expected, query="quantum")
 
 
@@ -412,7 +417,6 @@ def test_delete_all_compact_no_resurrection(spark, tmp_path):
     out = compact_until_clean(spark, ix)
     assert out["state"] == "clean"
     cat = Catalog(spark, ix)
-    assert cat.read("postings").count() == 0
     assert cat.read("blocks").count() == 0
     assert cat.read("doc_store").count() == 0
     assert cat.tombstones() is None
@@ -540,39 +544,103 @@ def test_cached_engine_detects_new_snapshot(spark, tmp_path):
         eng.close()
 
 
-def test_upsert_into_pre_pos_bytes_blocks_stays_consistent(spark, tmp_path):
-    """Review r4: appending pos_bytes-bearing blocks beside an old
-    (position-free) blocks table would make the inferred schema depend
-    on which footer Spark samples — upsert must keep the table
-    schema-consistent (drop pos_bytes) and phrase queries must fall
-    back to the row surface, correct as ever."""
-    from mias_spec import corpus as C
+def test_older_format_refused(spark, tmp_path):
+    """An index whose manifest lacks the current ``format_version``
+    (written before blocks became the only posting surface; its blocks
+    may lack pos_bytes) is refused with one clear error by every
+    reader and writer, before anything is touched; build_index over it
+    starts over and yields a current index."""
+    import os
 
-    from mias_spark.build import build_index
-    from mias_spark.catalog import Catalog
-    from mias_spark.ops import upsert
-    from mias_spark.search import Engine
+    from mias_spark.catalog import FORMAT_VERSION, Catalog
+    from mias_spark.ops import compact_step, optimize
+    from mias_spec import corpus as C
     ix = str(tmp_path / "ixold")
-    build_index(spark, spark.createDataFrame(C.make_corpus(40)), ix,
-                n_buckets=2)
+    c = C.make_corpus(30)
+    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
     cat = Catalog(spark, ix)
-    # simulate a pre-round-4 index: rewrite blocks without pos_bytes
-    old = cat.read("blocks").drop("pos_bytes")
-    cat.overwrite(old, "blocks", ["bucket"])
-    assert "pos_bytes" not in cat.read("blocks").columns
-    upsert(spark, ix, spark.createDataFrame(C.make_corpus(60).iloc[40:]))
-    # still uniform: the delta segment was aligned to the old schema
-    assert "pos_bytes" not in cat.read("blocks").columns
-    eng = Engine(spark, ix)
-    assert not eng._blocks_pos
-    # phrase + term queries still answer correctly in blocks mode
-    # (phrases via the row-surface fallback), rank-identical to df
-    for q in ('"items total"', "energy", 'partition "items total"'):
-        ref = eng.search(q, k=10, mode="df", with_fields=False)
-        got = eng.search(q, k=10, mode="blocks", with_fields=False)
-        assert len(ref.hits), q
-        assert [int(d) for d in got.hits["doc_id"]] == \
-            [int(d) for d in ref.hits["doc_id"]], q
+    assert cat.props()["format_version"] == FORMAT_VERSION
+    m = cat.manifest()
+    del m["props"]["format_version"]
+    cat._save(m)
+    snap = cat.manifest()["snapshot"]
+    calls = {
+        "Engine": lambda: Engine(spark, ix),
+        "upsert": lambda: upsert(spark, ix, spark.createDataFrame(
+            C.make_corpus(32).iloc[30:])),
+        "delete_by_path": lambda: delete_by_path(spark, ix, "src/"),
+        "compact_step": lambda: compact_step(spark, ix),
+        "optimize": lambda: optimize(spark, ix),
+    }
+    for name, fn in calls.items():
+        with pytest.raises(ValueError, match="rebuild the index"):
+            fn()
+    assert cat.manifest()["snapshot"] == snap, "a refused call mutated"
+    assert not os.path.exists(cat.path("tombstones"))
+    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
+    assert cat.props()["format_version"] == FORMAT_VERSION
+    _check_query(spark, ix, c, query='"items total"')
+
+
+def test_no_row_surfaces_through_lifecycle(spark, tmp_path):
+    """Packed blocks are the only posting surface through the whole
+    lifecycle: after build, a MERGE upsert with redeliveries, a
+    delete, a compaction epoch and optimize, no postings or tokens
+    table (nor any staging segment) exists, the dictionary df and
+    field stats equal a fresh index over the live corpus, and both
+    plans return the oracle's complete hit sets for a term, a phrase
+    and a -NOT query."""
+    import os
+
+    from mias_spark.catalog import Catalog
+    from mias_spark.ops import compact_until_clean, optimize
+    queries = ["energy", '"items total"', "energy -momentum"]
+    c = corpus.make_corpus(60)
+    ix = str(tmp_path / "ixlife")
+
+    def check(step, live):
+        cat = Catalog(spark, ix)
+        dirs = set(os.listdir(ix))
+        assert not dirs & {"postings", "tokens"}, (step, dirs)
+        assert not [d for d in dirs if d.startswith("_staging")], \
+            (step, dirs)
+        _assert_stats_match_fresh(cat, live)
+        oidx = oracle.build_index(live.reset_index(drop=True))
+        okeys = oidx.docs.set_index("doc_id")["doc_key"]
+        keys = (cat.read("doc_store").select("doc_id", "doc_key")
+                .toPandas().set_index("doc_id")["doc_key"])
+        eng = Engine(spark, ix)
+        for q in queries:
+            exp = oracle.search(oidx, q, k=1000)
+            assert len(exp), (step, q)
+            want = _ranked_keys(exp, okeys)
+            for mode in ("blocks", "df"):
+                got = eng.search(q, k=1000, mode=mode, with_fields=False)
+                assert _ranked_keys(got.hits, keys) == want, \
+                    (step, q, mode)
+
+    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
+    check("build", c)
+    changed = c.iloc[[2, 7, 11]].copy()
+    changed["content"] = [
+        "<html><body><p>items total energy momentum</p></body></html>",
+        "<html><body><p>energy electron items total</p></body></html>",
+        "<html><body><p>quantum data lattice</p></body></html>"]
+    extra = corpus.make_corpus(66).iloc[60:66]
+    assert upsert(spark, ix, spark.createDataFrame(
+        pd.concat([changed, extra], ignore_index=True))) == \
+        {"added": 9, "replaced": 3}
+    live = pd.concat([c.drop(index=changed.index), changed, extra],
+                     ignore_index=True)
+    check("upsert", live)
+    assert delete_by_path(spark, ix, "src/dir4/") > 0
+    live = live[~live["path"].str.startswith("src/dir4/")]
+    check("delete", live)
+    assert compact_until_clean(spark, ix)["state"] == "clean"
+    assert Catalog(spark, ix).tombstones() is None
+    check("compact", live)
+    optimize(spark, ix)
+    check("optimize", live)
 
 
 def test_staging_reclaimed_and_overwrite_mode_restored(spark, tmp_path):
@@ -595,7 +663,7 @@ def test_staging_reclaimed_and_overwrite_mode_restored(spark, tmp_path):
     delete_by_path(spark, ix, "src/dir1/")
     for t in ("_staging_replaced", "_staging_delta_store",
               "_staging_delta_toks", "_staging_dead_toks",
-              "_staging_doomed"):
+              "_staging_doomed", "_staging_build_tokens"):
         assert not os.path.exists(os.path.join(ix, t)), t
     # the chunked blocks build + compaction both use dynamic partition
     # overwrite internally; the session conf must come back unchanged
@@ -627,8 +695,8 @@ def test_upsert_pruned_dictionary_join(spark, tmp_path, monkeypatch):
         eng = Engine(spark, ix)
         r = eng.search("energy", k=20, with_fields=True)
         hits[tag] = r.hits[["path", "score"]].reset_index(drop=True)
-        # posting parity: both paths emit the same number of rows
-        hits[tag + "_n"] = eng.cat.read("postings").count()
+        # posting parity: both paths pack the same number of postings
+        hits[tag + "_n"] = index_stats(eng.cat)["n_postings"]
     assert hits["pruned_n"] == hits["plain_n"]
     assert list(hits["pruned"]["path"]) == list(hits["plain"]["path"])
     assert np.allclose(hits["pruned"]["score"].astype(float),

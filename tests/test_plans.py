@@ -1,8 +1,8 @@
 """Physical-plan audits: the optimizations the scale story depends on
 must be visible in the executed plans, not assumed.
 
-- bucket partition pruning + term_id predicate pushdown on postings
-  and blocks scans
+- bucket partition pruning + term_id predicate pushdown on the blocks
+  scans of both plans
 - broadcast (never shuffle) joins for the tiny clause table
 - no cartesian products anywhere in the query paths
 """
@@ -18,19 +18,22 @@ def _plan(df) -> str:
 
 
 def test_postings_scan_pushdown(spark, tiny_build):
-    """The df plan's postings scan must push the term/bucket predicates
-    into the parquet reader (PushedFilters) and prune bucket partitions
-    — a scan reading all buckets for a 2-term query is wrong."""
+    """The df plan decodes its posting rows from a blocks scan that
+    must push the term predicate into the parquet reader
+    (PushedFilters) and prune bucket partitions (PartitionFilters) — a
+    scan reading all buckets for a 2-term query is wrong."""
     c, cat, oidx, ix = tiny_build
     eng = Engine(spark, ix)
     clauses, pplan, ng, proc, q = eng.compile("energy")
     scored = eng._score_dataframe(clauses)
     plan = _plan(scored)
-    assert "PushedFilters: [" in plan
-    assert "term_id" in plan.split("PushedFilters")[1][:200]
+    assert "MapInPandas" in plan          # the block decoder
+    scan = plan[plan.index("FileScan parquet"):].split("\n")[0]
+    assert "/blocks]" in scan
+    assert "term_id" in scan.split("PushedFilters: [")[1][:200]
     # partition pruning on the bucket dir: the partition filter list
-    # names bucket, and the chosen buckets only
-    assert "bucket" in plan
+    # names bucket
+    assert "bucket" in scan.split("PartitionFilters: [")[1][:200]
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
 
 
@@ -78,7 +81,6 @@ def test_phrase_blocks_mode_never_scans_posting_rows(
     from mias_spec import oracle as O
     import numpy as np
     eng = Engine(spark, ix)
-    assert eng._blocks_pos
     touched = []
     orig_pruned, orig_base = Engine._pruned, Engine._base
 
@@ -106,5 +108,5 @@ def test_phrase_blocks_mode_never_scans_posting_rows(
                            exp["score"].astype(float), atol=1e-6), q
     # the decoded-positions frame itself reads only the blocks files
     clauses, pplan, ng, proc, cq = eng.compile('"items total"')
-    must_df, banned = eng._phrase_frames(pplan, surface="blocks")
+    must_df, banned = eng._phrase_frames(pplan)
     assert "postings" not in _plan(must_df)

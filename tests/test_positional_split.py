@@ -2,17 +2,13 @@
 packs only for content/title — the fields phrase adjacency can ever
 read — so pmath/cmath M-term positions (the bulk of the position
 volume in a math-dense corpus) are never encoded at build, and the
-property survives compaction. ``pack_positions=False`` builds the
-round-3 format (no column at all) and phrases fall back to the
-postings-row surface."""
+property survives compaction."""
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 from mias_spark.build import build_index
 from mias_spark.search import Engine
-from mias_spec import corpus, oracle as O
+from mias_spec import corpus
 
 
 def _pos_null_by_field(spark, ix):
@@ -59,23 +55,3 @@ def test_split_survives_compaction(spark, tmp_path):
     r = eng.search('"items total"', k=10, mode="blocks",
                    with_fields=False)
     assert r.blocks_stats is not None and len(r.hits)
-
-
-def test_pack_positions_false_round3_format(spark, tmp_path):
-    """The bench-attribution build: no pos_bytes column anywhere, and
-    phrase queries answer rank-identically via the row surface."""
-    c = corpus.make_corpus(60)
-    ix = str(tmp_path / "ix_nopos")
-    build_index(spark, spark.createDataFrame(c), ix, n_buckets=2,
-                pack_positions=False)
-    eng = Engine(spark, ix)
-    assert "pos_bytes" not in eng.cat.read("blocks").columns
-    assert eng._blocks_pos is False
-    oidx = O.build_index(c)
-    for q in ['"items total"', 'partition "items total"']:
-        got = eng.search(q, k=10, mode="blocks", with_fields=False)
-        exp = O.search(oidx, q, "BOTH", 10)
-        assert [int(d) for d in got.hits["doc_id"]] == \
-            [int(d) for d in exp["doc_id"]], q
-        assert np.allclose(got.hits["score"].astype(float),
-                           exp["score"].astype(float), atol=1e-6), q

@@ -30,26 +30,27 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ix = sys.argv[1] if len(sys.argv) > 1 else \
         os.path.join(tempfile.gettempdir(), "mias_plan_ix")
-    if not os.path.exists(os.path.join(ix, "manifest.json")):
-        build_index(spark, spark.createDataFrame(make_corpus(300)), ix,
-                    n_buckets=4)
+    # resumable: a finished current-format index is reused as is, one
+    # of an older on-disk format is rebuilt
+    build_index(spark, spark.createDataFrame(make_corpus(300)), ix,
+                n_buckets=4)
     eng = Engine(spark, ix)
     sections = []
 
     clauses, pplan, ng, proc, q = eng.compile("energy electron")
-    sections.append(("BM25 df-plan scorer (postings scan, 2-term query)",
-                     "bucket partition pruning + term_id/bucket "
-                     "PushedFilters reach the parquet reader; the clause "
-                     "table broadcasts; aggregation is partial+final "
-                     "inside whole-stage codegen",
+    sections.append(("BM25 df-plan scorer (decoded blocks, 2-term query)",
+                     "bucket partition pruning + term_id PushedFilters "
+                     "reach the blocks parquet reader; posting rows are "
+                     "decoded from the pruned blocks in one MapInPandas; "
+                     "the clause table broadcasts",
                      fmt(eng._score_dataframe(clauses))))
 
     clauses2, pplan2, ng2, proc2, q2 = eng.compile('"items total"')
     must, banned = eng._phrase_frames(pplan2)
-    sections.append(("Phrase clause, df mode (positional postings, "
-                     "adjacency via array_intersect)",
-                     "each join side is ONE term's pruned posting list; "
-                     "adjacency verification is native (no Python)",
+    sections.append(("Phrase clause, df mode (positions decoded from "
+                     "blocks, adjacency via array_intersect)",
+                     "each join side is ONE term's pruned, decoded "
+                     "posting list; adjacency verification is native",
                      fmt(must)))
 
     # the FUSED blocks-mode phrase scan (round 5): phrase/banned term
@@ -77,8 +78,7 @@ def main() -> None:
                      "the scoring kernel's own bucket+term-pruned scan; "
                      "position decode, adjacency and MUST_NOT exclusion "
                      "happen inside the one applyInPandas — no extra "
-                     "Python stages, and the postings row table never "
-                     "appears (Lucene positions-file analog)",
+                     "Python stages (Lucene positions-file analog)",
                      fmt(eng._fused_union(None, fused2, {}))))
 
     # round-3: the bounded per-term block-metadata reduction (one row
