@@ -26,6 +26,8 @@ Two physical plans, rank-identical by construction:
 from __future__ import annotations
 
 import itertools
+import sys
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -44,6 +46,12 @@ from mias_spec.scoring import idf as idf_fn
 #: dispatch + Arrow transfer never dominate; the shard count scales
 #: linearly with query posting volume up to defaultParallelism
 _SHARD_POSTINGS = 1 << 18
+
+#: byte budget of a cached Engine's row memo (_RowMemo): the block rows
+#: and display rows its fast path read driver-side, kept for the pinned
+#: snapshot — a popular term's blocks and the popular hits' docs stay
+#: resident the way a warm searcher's page cache and document cache do
+_MEMO_BYTES = 64 << 20
 
 CLAUSE_SCHEMA = ("term_id long, grp int, boost double, idf double, "
                  "avgdl double, bucket int")
@@ -79,10 +87,41 @@ class SearchResult:
     #: masked; -1 when tombstones/exclusions rode the co-grouped
     #: channel instead) and read (how the block rows were fetched:
     #: "arrow" = read driver-side with pyarrow, zero Spark jobs, the
-    #: fast path on the parquet binding; "spark" = a Spark job). None
+    #: fast path on the parquet binding; "spark" = a Spark job),
+    #: memo_terms (how many of the query's terms had their block rows
+    #: served from a cached Engine's row memo of the pinned snapshot
+    #: instead of that read; 0 on a cold call and with cache=False). None
     #: for df-mode. Per-call value: concurrent searches on one Engine
     #: each get their own.
     blocks_stats: dict | None = None
+
+
+class _RowMemo:
+    """Least-recently-used map of rows read driver-side, bounded by
+    the summed byte size of its entries (``cap``): an entry that
+    pushes the total past the cap evicts the oldest ones, itself last.
+    Holds no lock: the owning Engine holds its own around every call."""
+
+    def __init__(self, cap: int):
+        self.cap = cap
+        self.nbytes = 0
+        self._d: OrderedDict = OrderedDict()
+
+    def get(self, key):
+        hit = self._d.get(key)
+        if hit is None:
+            return None
+        self._d.move_to_end(key)
+        return hit[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        old = self._d.pop(key, None)
+        if old is not None:
+            self.nbytes -= old[1]
+        self._d[key] = (value, nbytes)
+        self.nbytes += nbytes
+        while self.nbytes > self.cap:
+            self.nbytes -= self._d.popitem(last=False)[1][1]
 
 
 def _merge_partials(acc_docs, acc_grps, acc_scores, gm):
@@ -678,8 +717,11 @@ class Engine:
     query that fits one kernel shard, the k display docs) run
     driver-side with pyarrow over dataset handles opened once per
     snapshot, so a small query runs zero Spark jobs and doc_store is
-    never persisted; on the Iceberg binding the display fetch is a
-    Spark point read over a doc_store persisted whole. A commit on
+    never persisted. With cache=True those block rows and display
+    rows stay in a byte-bounded memo of the snapshot (``_rows``), so
+    a repeat query reads only what it has not read before. On the
+    Iceberg binding the display fetch is a Spark point read over a
+    doc_store persisted whole. A commit on
     the index (upsert/delete/compaction) is detected by snapshot
     version at the next compile and drops every cache — the Lucene
     reopen-on-new-commit-point semantics, automated
@@ -740,6 +782,10 @@ class Engine:
         self._slices_cap = 64
         #: (dead ids,) for the pinned snapshot once read — see _dead_ids
         self._dead: tuple | None = None
+        #: cache=True: the snapshot's block rows per (term, columns) and
+        #: display rows per (doc, with content) read driver-side — see
+        #: _blocks_arrow and _fetch_docs
+        self._rows = _RowMemo(_MEMO_BYTES)
         #: guards the driver-side caches (plans/slices/tables/term/meta)
         #: under concurrent searches — held only around dict mutation,
         #: never across a Spark job
@@ -750,14 +796,14 @@ class Engine:
 
     def _refresh_if_stale(self) -> None:
         """Every memo (prepared plans, persisted slices, term lookups,
-        block metadata) pins the snapshot it was built against; a
-        commit on the index (upsert, delete, compaction) would
-        otherwise be silently ignored by memo hits — a deleted doc
-        could resurrect from a cached plan (ADVICE r4). One local
-        manifest read per compile detects a newer snapshot and drops
-        every cache + refreshes the pinned stats: fresh-Engine
-        semantics, automated. (On the Iceberg binding this becomes a
-        snapshot-id check against the catalog.)"""
+        block metadata, block and display rows) pins the snapshot it
+        was built against; a commit on the index (upsert, delete,
+        compaction) would otherwise be silently ignored by memo hits —
+        a deleted doc could resurrect from a cached plan (ADVICE r4).
+        One local manifest read per compile detects a newer snapshot
+        and drops every cache + refreshes the pinned stats:
+        fresh-Engine semantics, automated. (On the Iceberg binding
+        this becomes a snapshot-id check against the catalog.)"""
         with self._lock:
             # whole check under the lock: reading `cur` outside could
             # let a stalled thread move _snap backwards
@@ -781,6 +827,7 @@ class Engine:
             self._bases = {}
             self._dsets = {}
             self._dead = None
+            self._rows = _RowMemo(_MEMO_BYTES)
             self._pin_props()
             self._snap = cur
 
@@ -878,8 +925,10 @@ class Engine:
             self._term_cache.clear()
             self._block_meta.clear()
             self._plans.clear()
+            self._bases = {}
             self._dsets = {}
             self._dead = None
+            self._rows = _RowMemo(_MEMO_BYTES)
 
     def _dead_ids(self):
         """Sorted int64 tombstone ids of the pinned snapshot, read once
@@ -1373,20 +1422,43 @@ class Engine:
         and lang when ``content``) of the k hit docs from the index's
         own doc_store. On the parquet binding a driver-side pyarrow
         point read — the dseg partitions holding the ids, row groups
-        pruned by the doc_id filter — costs zero Spark jobs; the Spark
+        pruned by the doc_id filter — costs zero Spark jobs, and a
+        cached Engine keeps the rows it read per (doc_id, content) in
+        its row memo, reading only the ids it has not seen; the Spark
         point read (_display_frame) serves the Iceberg binding and any
         store arrow cannot read."""
         cols = DISPLAY_COLS + (["content", "lang"] if content else [])
-        dset = self._dset("doc_store")
-        if dset is not None:
-            where = {"doc_id": ids}
+        with self._lock:       # memo and handle of one snapshot
+            memo = self._rows if self._cache else None
+            dset = self._dset("doc_store")
+        if dset is None:
+            return self._display_frame(ids).select(*cols).toPandas()
+        seen, todo = [], ids
+        if memo is not None:
+            with self._lock:
+                got = [memo.get(("doc", d, content)) for d in ids]
+            seen = [g for g in got if g is not None]
+            todo = [d for d, g in zip(ids, got) if g is None]
+        pdf = None
+        if todo:
+            where = {"doc_id": todo}
             if "dseg" in dset.schema.names:
                 where["dseg"] = sorted({d >> self.doc_seg_shift
-                                        for d in ids})
+                                        for d in todo})
             pdf = self.cat.read_local("doc_store", cols, where, dset)
-            if pdf is not None:
-                return pdf
-        return self._display_frame(ids).select(*cols).toPandas()
+            if pdf is None:
+                return self._display_frame(ids).select(*cols).toPandas()
+            if memo is not None:
+                recs = list(pdf.itertuples(index=False, name=None))
+                with self._lock:
+                    for rec in recs:
+                        memo.put(("doc", rec[0], content), rec,
+                                 sum(map(sys.getsizeof, rec)))
+        if not seen:
+            return pdf
+        known = pd.DataFrame.from_records(seen, columns=cols)
+        return known if pdf is None else pd.concat([pdf, known],
+                                                   ignore_index=True)
 
     def _display_frame(self, ids: list[int]) -> DataFrame:
         """doc_store slice for the k hit docs as a Spark frame. On a
@@ -1661,15 +1733,15 @@ class Engine:
             hit = self._plan_get(pkey)
             if hit is not None:
                 if hit[-1] == "fast":
-                    # the memo holds the read spec, never the rows:
-                    # a hit re-reads them (driver memory stays bounded
-                    # by the plan LRU); metadata came from the memo, so
+                    # the plan holds the read spec; the rows come from
+                    # the byte-bounded row memo (_blocks_arrow) or are
+                    # read again; metadata came from the memo, so
                     # meta_rows is 0
                     spec_m, cl_m, cmap_m, mb_m, fu_m, dead_m, _ = hit
-                    pdfb, read = self._fast_rows(*spec_m, fu_m, cmap_m)
                     return self._topk_blocks_local(
-                        pdfb, cl_m, cmap_m, mb_m, topn, n_groups,
-                        dead_m, memo_hit=True, fused=fu_m, read=read)
+                        self._fast_rows(*spec_m, fu_m, cmap_m), cl_m,
+                        cmap_m, mb_m, topn, n_groups, dead_m,
+                        memo_hit=True, fused=fu_m)
                 # pdead: the dead-id array (driver) or the dead_ids
                 # stat (dist) the plan was built with
                 plan, pparams, ptheta, pshards, pdead, kind = hit
@@ -1717,10 +1789,9 @@ class Engine:
             if pkey is not None:
                 self._plan_put(pkey, ((terms, buckets), clauses, cmap,
                                       max_boost, fused, dead, "fast"))
-            pdfb, read = self._fast_rows(terms, buckets, fused, cmap)
-            return self._topk_blocks_local(pdfb, clauses, cmap,
-                                           max_boost, topn, n_groups,
-                                           dead, fused=fused, read=read)
+            return self._topk_blocks_local(
+                self._fast_rows(terms, buckets, fused, cmap), clauses,
+                cmap, max_boost, topn, n_groups, dead, fused=fused)
         # column-prune the scoring scan: the kernel never reads
         # pos_bytes for SCORING (positions serve phrase adjacency
         # only) and the partition column is spent after pruning.
@@ -1785,7 +1856,8 @@ class Engine:
             return empty, 0, "eq", {
                 "skipped_blocks": 0, "lossy_blocks": 0, "theta": 0.0,
                 "n_shards": 0, "meta_rows": meta_rows,
-                "path": "distributed", "dead_ids": 0, "read": "spark"}
+                "path": "distributed", "dead_ids": 0, "read": "spark",
+                "memo_terms": 0}
         if mrows:
             lo = min(int(r["blo"]) for r in mrows)
             hi = max(int(r["bhi"]) for r in mrows)
@@ -2032,37 +2104,67 @@ class Engine:
 
     def _fast_rows(self, terms: list[int], buckets: list[int],
                    fused: dict | None, cmap: dict
-                   ) -> tuple[pd.DataFrame, str]:
-        """(block rows, how they were read) for a fast-path query: the
-        pyarrow read when it can serve them ("arrow", zero Spark jobs),
-        else one Spark collect of the same rows ("spark")."""
-        pdfb = self._blocks_arrow(terms, fused, cmap)
-        if pdfb is not None:
-            return pdfb, "arrow"
+                   ) -> tuple[pd.DataFrame, str, int]:
+        """(block rows, how they were read, memo_terms) for a fast-path
+        query: the pyarrow read when it can serve them ("arrow", zero
+        Spark jobs), else one Spark collect of the same rows
+        ("spark")."""
+        got = self._blocks_arrow(terms, fused, cmap)
+        if got is not None:
+            return got[0], "arrow", got[1]
         bdf = self._scoring_frame(terms, buckets) if terms else None
         if fused:
             bdf = self._fused_union(bdf, fused, cmap)
-        return bdf.toPandas(), "spark"
+        return bdf.toPandas(), "spark", 0
 
     def _blocks_arrow(self, terms: list[int], fused: dict | None,
-                      cmap: dict) -> pd.DataFrame | None:
+                      cmap: dict) -> tuple[pd.DataFrame, int] | None:
         """The fast path's block rows read driver-side with pyarrow:
         the frame ``_fused_union(...).toPandas()`` (or the scoring
         scan's, unfused) would collect — same columns, dtypes and
         nulls; row order is irrelevant to the kernel. Scoring terms
         read every column but pos_bytes (null when fused), phrase
         terms keep pos_bytes, banned-only terms read doc_bytes alone
-        with null tf/dl/w/pos bytes. None when arrow cannot serve the
-        read: Iceberg binding or unreadable files."""
-        dset = self._dset("blocks")
+        with null tf/dl/w/pos bytes. A cached Engine keeps each term's
+        rows (an empty frame for a term with none) per column set in
+        its row memo and reads only the terms it has not seen. Returns
+        (rows, how many terms the memo served), or None when arrow
+        cannot serve the read: Iceberg binding or unreadable files."""
+        with self._lock:       # memo and handle of one snapshot
+            memo = self._rows if self._cache else None
+            dset = self._dset("blocks")
         if dset is None:
             return None
         nb = self.n_buckets
+        n_memo = 0
 
         def read(tids, cols):
-            return self.cat.read_local(
-                "blocks", cols, {"bucket": sorted({t % nb for t in tids}),
-                                 "term_id": tids}, dset)
+            nonlocal n_memo
+            parts, todo = [], tids
+            if memo is not None:
+                with self._lock:
+                    got = [memo.get(("blocks", t, tuple(cols)))
+                           for t in tids]
+                parts = [g for g in got if g is not None]
+                todo = [t for t, g in zip(tids, got) if g is None]
+                n_memo += len(parts)
+            if todo:
+                pdf = self.cat.read_local(
+                    "blocks", cols,
+                    {"bucket": sorted({t % nb for t in todo}),
+                     "term_id": todo}, dset)
+                if pdf is None:
+                    return None
+                parts.append(pdf)
+                if memo is not None:
+                    by_t = dict(iter(pdf.groupby("term_id", sort=False)))
+                    with self._lock:
+                        for t in todo:
+                            g = by_t.get(t, pdf.iloc[:0])
+                            memo.put(("blocks", t, tuple(cols)), g, int(
+                                g.memory_usage(deep=True).sum()))
+            return (parts[0] if len(parts) == 1
+                    else pd.concat(parts, ignore_index=True))
 
         score_cols = [c for c in blk._COLS if c != "pos_bytes"]
         ptids = fused["ptids"] if fused else frozenset()
@@ -2084,7 +2186,7 @@ class Engine:
                 return None
             parts.append(pdf.assign(**dict.fromkeys(nulls)))
         return pd.concat(parts, ignore_index=True)[
-            blk._COLS if fused else score_cols]
+            blk._COLS if fused else score_cols], n_memo
 
     def _fused_union(self, bdf: DataFrame | None, fused: dict,
                      cmap: dict) -> DataFrame:
@@ -2126,75 +2228,91 @@ class Engine:
         return pd.DataFrame(rows, columns=[
             "doc_id", "score", "n_hits", "n_skipped", "n_lossy"])
 
-    def _topk_blocks_local(self, pdfb: pd.DataFrame,
+    def _topk_blocks_local(self, rows: tuple[pd.DataFrame, str, int],
                            clauses: pd.DataFrame, cmap: dict,
                            max_boost: dict, topn: int, n_groups: int,
                            dead: np.ndarray, memo_hit: bool = False,
-                           fused: dict | None = None, read: str = "arrow",
+                           fused: dict | None = None,
                            ) -> tuple[pd.DataFrame, int, str, dict]:
         """Driver-side mirror of the _topk_blocks pruning pipeline for
         queries whose dictionary df already bounds the posting volume
         to one shard's worth: on the few compressed block rows
-        (``pdfb``, see _fast_rows; ``read`` says how they were
-        fetched), metadata reduction, the theta floor, conjunctive
+        (``rows`` = _fast_rows' (frame, read, memo_terms), reported in
+        the stats), metadata reduction, the theta floor, conjunctive
         range filters, the fused phrase pre-pass and the kernel all run
-        on the local frame. ``dead`` (sorted tombstone ids) is masked
-        in the kernel, and blocks whose doc range holds a dead id are
-        left out of the theta floor. Semantics are identical to the
-        distributed path — pinned by the forced-distributed
-        comparisons in test_driver_kernel_short_circuit_and_prepared_plans
-        and test_tombstoned_fast_path_matches_oracle_and_distributed."""
+        on the local frame, the per-block arithmetic in numpy over the
+        terms' ``np.unique`` inverse. ``dead`` (sorted tombstone ids)
+        is masked in the kernel, and blocks whose doc range holds a
+        dead id are left out of the theta floor. Semantics are
+        identical to the distributed path — pinned by the
+        forced-distributed comparisons in
+        test_driver_kernel_short_circuit_and_prepared_plans and
+        test_tombstoned_fast_path_matches_oracle_and_distributed."""
+        pdfb, read, memo_terms = rows
         empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                               "score": pd.Series(dtype="float64")})
         if not len(pdfb):
             return empty, 0, "eq", {
                 "skipped_blocks": 0, "lossy_blocks": 0, "theta": 0.0,
                 "n_shards": 0, "meta_rows": 0, "path": "fast",
-                "dead_ids": int(len(dead)), "read": read}
+                "dead_ids": int(len(dead)), "read": read,
+                "memo_terms": memo_terms}
         imap = {int(r.term_id): (float(r.idf), float(r.avgdl))
                 for r in clauses.drop_duplicates("term_id").itertuples()}
         # fused extras (phrase/banned-term blocks) skip the scoring
         # metadata/pruning — the kernel pre-pass consumes them whole
-        sc_m = (pdfb["term_id"].astype("int64").isin(list(imap))
-                if imap else pd.Series(False, index=pdfb.index))
-        ex = pdfb[~sc_m]
-        pdfb = pdfb[sc_m]
+        sc_m = np.isin(pdfb["term_id"].to_numpy(np.int64), list(imap))
+        ex = None
+        if not sc_m.all():
+            ex, pdfb = pdfb[~sc_m], pdfb[sc_m]
         meta: dict[int, tuple] = {}
         theta, keep = 0.0, np.ones(len(pdfb), bool)
         eg = -1
         if len(pdfb):
-            tid = pdfb["term_id"].astype("int64")
-            fidf = tid.map(lambda t: imap[t][0])
-            favg = tid.map(lambda t: imap[t][1])
-            i0 = pdfb["idf0"].astype(float).fillna(fidf)
-            a0 = pdfb["avgdl0"].astype(float).fillna(favg)
-            scale = fidf / np.maximum(i0, 1e-12)
-            ratio = favg / np.maximum(a0, 1e-12)
-            ms = pdfb["max_score"].astype(float)
+            ut, inv = np.unique(pdfb["term_id"].to_numpy(np.int64),
+                                return_inverse=True)
+            terms = ut.tolist()
+            fidf = np.array([imap[t][0] for t in terms])[inv]
+            favg = np.array([imap[t][1] for t in terms])[inv]
+            i0 = pdfb["idf0"].to_numpy(np.float64, na_value=np.nan)
+            a0 = pdfb["avgdl0"].to_numpy(np.float64, na_value=np.nan)
+            scale = fidf / np.maximum(np.where(np.isnan(i0), fidf, i0),
+                                      1e-12)
+            ratio = favg / np.maximum(np.where(np.isnan(a0), favg, a0),
+                                      1e-12)
+            ms = pdfb["max_score"].to_numpy(np.float64)
+            ub_b = ms * scale * np.maximum(ratio, 1.0)
             lb = ms * scale * np.minimum(ratio, 1.0)
+            lo_b = pdfb["first_doc"].to_numpy(np.int64)
+            hi_b = pdfb["last_doc"].to_numpy(np.int64)
             if len(dead):
                 # a block holding a dead id may owe its max_score to
                 # that doc: it cannot vouch for a live doc, so it is
                 # left out of the floor (lbn over dead-free blocks)
-                lo_b = pdfb["first_doc"].to_numpy(np.int64)
-                hi_b = pdfb["last_doc"].to_numpy(np.int64)
                 holds = (np.searchsorted(dead, hi_b, "right")
                          > np.searchsorted(dead, lo_b))
-                lb = lb.where(~holds)
-            pdfb = pdfb.assign(idf=fidf, avgdl=favg,
-                               _ub=ms * scale * np.maximum(ratio, 1.0),
-                               _lb=lb)
+                lb = np.where(holds, np.nan, lb)
+            pdfb = pdfb.assign(idf=fidf, avgdl=favg)
             # per-term reduced metadata — the same (ubm, nb, npost,
-            # blo, bhi, lbn) tuple the distributed agg returns
-            for t, g in pdfb.groupby("term_id"):
-                t = int(t)
-                nb = len(g)
-                lbs = np.sort(g["_lb"].dropna().to_numpy())[::-1]
-                lbn = float(lbs[topn - 1]) if len(lbs) >= topn else None
-                meta[t] = (float(g["_ub"].max()), nb,
-                           int(g["n_docs"].sum()),
-                           int(g["first_doc"].min()),
-                           int(g["last_doc"].max()), lbn)
+            # blo, bhi, lbn) tuple the distributed agg returns. Rows
+            # ordered by term, then lower bound descending (NaN last),
+            # so each term's topn-th row holds its topn-th largest
+            # lower bound when it has that many
+            o = np.lexsort((-lb, inv))
+            nb = np.bincount(inv)
+            st = np.cumsum(nb) - nb
+            ubm = np.maximum.reduceat(ub_b[o], st)
+            npost = np.add.reduceat(
+                pdfb["n_docs"].to_numpy(np.int64)[o], st)
+            blo = np.minimum.reduceat(lo_b[o], st)
+            bhi = np.maximum.reduceat(hi_b[o], st)
+            nlb = np.bincount(inv[~np.isnan(lb)], minlength=len(ut))
+            lb_o = lb[o]
+            for j, t in enumerate(terms):
+                meta[t] = (float(ubm[j]), int(nb[j]), int(npost[j]),
+                           int(blo[j]), int(bhi[j]),
+                           float(lb_o[st[j] + topn - 1])
+                           if nlb[j] >= topn else None)
             if self._cache:
                 ckey = topn if n_groups == 1 else None
                 with self._lock:
@@ -2209,9 +2327,9 @@ class Engine:
             ub = {t: v[0] * max_boost[t] for t, v in meta.items()}
             sum_ub = sum(ub.values())
             if theta > 0.0:
-                rest = tid.map(lambda t: sum_ub - ub[t])
-                mb = tid.map(lambda t: max_boost[t])
-                keep &= (mb * pdfb["_ub"] + rest >= theta).to_numpy()
+                rest = np.array([sum_ub - ub[t] for t in terms])[inv]
+                mb = np.array([max_boost[t] for t in terms])[inv]
+                keep &= mb * ub_b + rest >= theta
             if n_groups > 1:
                 glo: dict[int, int] = {}
                 ghi: dict[int, int] = {}
@@ -2222,21 +2340,18 @@ class Engine:
                         ghi[g2] = max(ghi.get(g2, v[4]), v[4])
                         gpost[g2] = gpost.get(g2, 0) + v[2]
                 eg = min(gpost, key=lambda g2: (gpost[g2], g2))
-                rlo_m: dict[int, int] = {}
-                rhi_m: dict[int, int] = {}
                 lo_s = min(v[3] for v in meta.values())
                 hi_s = max(v[4] for v in meta.values())
-                for t in meta:
+                rlo, rhi = [], []
+                for t in terms:
                     gs = {g2 for g2, _ in cmap[t]}
                     others = [g2 for g2 in glo if g2 not in gs]
-                    rlo_m[t] = max((glo[g2] for g2 in others),
-                                   default=lo_s)
-                    rhi_m[t] = min((ghi[g2] for g2 in others),
-                                   default=hi_s)
-                keep &= ((pdfb["last_doc"].astype("int64")
-                          >= tid.map(rlo_m)).to_numpy()
-                         & (pdfb["first_doc"].astype("int64")
-                            <= tid.map(rhi_m)).to_numpy())
+                    rlo.append(max((glo[g2] for g2 in others),
+                                   default=lo_s))
+                    rhi.append(min((ghi[g2] for g2 in others),
+                                   default=hi_s))
+                keep &= ((hi_b >= np.array(rlo, np.int64)[inv])
+                         & (lo_b <= np.array(rhi, np.int64)[inv]))
         meta_rows = 0 if memo_hit else len(meta)
         if meta:
             lo = min(v[3] for v in meta.values())
@@ -2245,8 +2360,9 @@ class Engine:
         else:
             # phrase-only: one shard covers the whole doc-id space
             lo, span = 0, 1 << 62
-        pdfb = pdfb[keep]
-        if fused is not None and len(ex):
+        if not keep.all():
+            pdfb = pdfb[keep]
+        if fused is not None and ex is not None:
             pdfb = pd.concat([pdfb, ex], ignore_index=True)
         pdfb = pdfb.assign(shard=0)
         gvals = [int(g) for g in clauses["grp"]] + \
@@ -2256,8 +2372,10 @@ class Engine:
         params = (cmap, n_groups, topn, lo, span, 1, gmult, eg,
                   fused)
         allpdf = kernel_core(pdfb, params, dead)
-        return self._finish_blocks(allpdf, topn, theta, n_groups, 1,
-                                   meta_rows, "fast", len(dead), read)
+        res = self._finish_blocks(allpdf, topn, theta, n_groups, 1,
+                                  meta_rows, "fast", len(dead), read)
+        res[3]["memo_terms"] = memo_terms
+        return res
 
     def _finish_blocks(self, allpdf: pd.DataFrame, topn: int,
                        theta: float, n_groups: int, n_shards: int,
@@ -2265,20 +2383,26 @@ class Engine:
                        dead_ids: int = 0, read: str = "spark"
                        ) -> tuple[pd.DataFrame, int, str, dict]:
         """Merge kernel output rows (shard-local top-n + sentinels)
-        into (hits, total_hits, relation, per-call stats)."""
-        sent = allpdf[allpdf["doc_id"] < 0]
-        hits = (allpdf[allpdf["doc_id"] >= 0]
-                .assign(_okey=lambda d: np.round(
-                    d["score"].to_numpy(np.float64) * 1e9))
-                .sort_values(["_okey", "doc_id"], ascending=[False, True])
-                .head(topn)[["doc_id", "score"]].reset_index(drop=True))
-        total = int(sent["n_hits"].sum())
+        into (hits, total_hits, relation, per-call stats): the top-n
+        by the kernel's own key, (score rounded to 1e-9) descending
+        then doc_id, in one np.lexsort."""
+        doc = allpdf["doc_id"].to_numpy(np.int64)
+        score = allpdf["score"].to_numpy(np.float64)
+        live = doc >= 0
+        doc, score = doc[live], score[live]
+        top = np.lexsort((doc, -np.round(score * 1e9)))[:topn]
+        hits = pd.DataFrame({"doc_id": doc[top], "score": score[top]})
+
+        def sent(col):
+            return int(allpdf[col].to_numpy(np.int64)[~live].sum())
+
+        total = sent("n_hits")
         stats = {
-            "skipped_blocks": int(sent["n_skipped"].sum()),
-            "lossy_blocks": int(sent["n_lossy"].sum()),
+            "skipped_blocks": sent("n_skipped"),
+            "lossy_blocks": sent("n_lossy"),
             "theta": theta, "n_shards": int(n_shards),
             "meta_rows": int(meta_rows), "path": path,
-            "dead_ids": int(dead_ids), "read": read}
+            "dead_ids": int(dead_ids), "read": read, "memo_terms": 0}
         # totals are a lower bound whenever score-based pruning was
         # active: the driver-side theta filter, the in-kernel dynamic
         # theta (single-group), or the conjunctive dynamic floor

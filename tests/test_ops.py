@@ -772,7 +772,8 @@ def test_cached_engine_fast_path_drops_deleted_doc(spark, tmp_path,
     snapshot: the next search re-reads the dead set and reopens its
     arrow dataset handles, stays on the zero-job fast path, and the
     deleted doc never comes back through a memo. A later upsert's new
-    doc is found through the reopened handles."""
+    doc is found through the reopened handles, also under a term whose
+    block rows the row memo held before the commit."""
     c = corpus.make_corpus(60)
     ix = str(tmp_path / "ixmemo")
     build_index(spark, spark.createDataFrame(c), ix, n_buckets=2)
@@ -803,13 +804,22 @@ def test_cached_engine_fast_path_drops_deleted_doc(spark, tmp_path,
         # search on the cached Engine must list them, not serve the
         # file listing of the snapshot it opened on
         assert not len(eng.search("quasarion", k=5).hits)
+        r = eng.search("energy", k=10**6)
+        assert r.blocks_stats["memo_terms"] > 0
         new = corpus.make_corpus(61).iloc[60:].copy()
         new["content"] = ["<html><body><p>quasarion energy</p>"
                           "</body></html>"]
+        assert not set(new["path"]) & set(r.hits["path"])
         upsert(spark, ix, spark.createDataFrame(new))
         r, n_jobs = jobs_of(lambda: eng.search("quasarion", k=5))
         assert list(r.hits["path"]) == list(new["path"])
         assert r.blocks_stats["read"] == "arrow"
+        assert n_jobs == 0
+        # the commit dropped the memoized energy rows: a complete hit
+        # set now holds the new doc
+        r, n_jobs = jobs_of(lambda: eng.search("energy", k=10**6))
+        assert set(new["path"]) <= set(r.hits["path"])
+        assert r.blocks_stats["path"] == "fast"
         assert n_jobs == 0
     finally:
         eng.close()

@@ -82,9 +82,11 @@ def test_fast_path_zero_spark_jobs_and_parity(spark, tiny_build, tomb_ix,
     display docs are all read driver-side with pyarrow, and snippets
     are made driver-side. Cold and warm (cache=True, including its
     prepared-plan hits), for hits only, fields and snippets, on a clean
-    and a tombstoned index. The output equals column for column the
-    DictKV seam's and the Spark fallback's (every arrow dataset handle
-    refused: the same rows collected by Spark jobs)."""
+    and a tombstoned index. The warm Engine's second pass serves block
+    rows from its row memo (memo_terms > 0; a cold Engine reports 0)
+    with the cold Engine's exact output. The output equals column for
+    column the DictKV seam's and the Spark fallback's (every arrow
+    dataset handle refused: the same rows collected by Spark jobs)."""
     ix = tiny_build[3] if which == "clean" else tomb_ix[0]
     cold = Engine(spark, ix)
     warm = Engine(spark, ix, cache=True)
@@ -93,12 +95,17 @@ def test_fast_path_zero_spark_jobs_and_parity(spark, tiny_build, tomb_ix,
         for eng, runs in ((cold, 1), (warm, 2)):
             for q in _SHAPES:
                 for out, kw in _OUTPUTS.items():
-                    for _ in range(runs):
+                    for i in range(runs):
                         r, n_jobs = jobs_of(
                             lambda: eng.search(q, k=10, **kw))
                         assert n_jobs == 0, (q, out)
                         assert r.blocks_stats["path"] == "fast", (q, out)
                         assert r.blocks_stats["read"] == "arrow", (q, out)
+                        memo = r.blocks_stats["memo_terms"]
+                        if eng is cold:
+                            assert memo == 0, (q, out)
+                        elif i:
+                            assert memo > 0, (q, out)
                         assert len(r.hits), (q, out)
                         if (q, out) in got:
                             _same(r, got[(q, out)], (q, out))
@@ -120,6 +127,46 @@ def test_fast_path_zero_spark_jobs_and_parity(spark, tiny_build, tomb_ix,
             assert r.blocks_stats["path"] == "fast", (q, out)
             assert r.blocks_stats["read"] == "spark", (q, out)
             _same(r, got[(q, out)], ("spark", q, out))
+
+
+def test_row_memo_lru_under_cap(spark, tiny_build, monkeypatch):
+    """The row memo is one least-recently-used map bounded by its byte
+    total: an entry that passes the cap evicts the oldest entries first
+    (an entry larger than the cap is not kept). A cached Engine whose
+    memo holds exactly one query's rows serves that query from it, has
+    it evicted by other queries' rows, never holds more than the cap,
+    and returns a cold Engine's exact output throughout."""
+    import mias_spark.search as S
+    m = S._RowMemo(10)
+    m.put("a", 1, 4)
+    m.put("b", 2, 4)
+    assert m.get("a") == 1                 # a is now the most recent
+    m.put("c", 3, 4)                       # 12 > 10: b goes, not a
+    assert (m.get("b"), m.get("a"), m.get("c"), m.nbytes) == \
+        (None, 1, 3, 8)
+    m.put("d", 4, 11)                      # larger than the cap
+    assert (m.get("a"), m.get("d"), m.nbytes) == (None, None, 0)
+
+    ix = tiny_build[3]
+    cold = Engine(spark, ix)
+    want = {q: cold.search(q, k=10) for q in _SHAPES}
+    probe = Engine(spark, ix, cache=True)
+    probe.search(_SHAPES[0], k=10)
+    cap = probe._rows.nbytes               # the first shape's rows
+    probe.close()
+    monkeypatch.setattr(S, "_MEMO_BYTES", cap)
+    eng = Engine(spark, ix, cache=True)
+    try:
+        seen = []
+        for q in [_SHAPES[0], _SHAPES[0]] + _SHAPES[1:] + [_SHAPES[0]]:
+            r = eng.search(q, k=10)
+            _same(r, want[q], q)
+            assert 0 < eng._rows.nbytes <= cap, q
+            seen.append(r.blocks_stats["memo_terms"])
+        assert seen[0] == 0 and seen[1] > 0
+        assert seen[-1] == 0               # evicted by the other shapes
+    finally:
+        eng.close()
 
 
 def test_dictionary_fold_on_staleness(spark, tmp_path):
